@@ -11,7 +11,7 @@ import os
 
 import pytest
 
-from trafficbigdatasearch_spark.queries import standard
+from trafficbigdatasearch_spark.queries import standard, std_core
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -63,7 +63,7 @@ def test_approx_sketches_accuracy(spark, duck):
 
     got = {
         r["l_returnflag"]: r
-        for r in standard.approx_sketches_raw(spark, SF).collect()
+        for r in std_core.approx_sketches_raw(spark, SF).collect()
     }
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
     for flag, row in got.items():

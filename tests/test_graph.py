@@ -50,16 +50,6 @@ def test_chain_star_and_components(spark):
     assert set(expect.values()) >= {0, 100, 200}
 
 
-def test_rounds_per_check_below_one_raises(spark):
-    # 0 contractions would make the first convergence check compare the
-    # pre-pass edge set with itself and return wrong components silently;
-    # the module's loud-failure convention demands a ValueError instead.
-    df = spark.createDataFrame([(1, 2), (2, 3)], "id_a: bigint, id_b: bigint")
-    for bad in (0, -1):
-        with pytest.raises(ValueError, match="rounds_per_check"):
-            graph.connected_components(df, rounds_per_check=bad)
-
-
 def test_isolated_nodes_label_themselves(spark):
     pairs = [(1, 2)]
     nodes = spark.createDataFrame([(1,), (2,), (9,)], "id: bigint")

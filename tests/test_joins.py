@@ -261,7 +261,7 @@ def test_quality_referential_fact_edge_bloom_and_preagg(spark):
     signal) — pinned both ways, with the violation count equal to the plain
     row-level anti join in each."""
     from trafficbigdatasearch_spark.catalog import load_table
-    from trafficbigdatasearch_spark.queries import standard
+    from trafficbigdatasearch_spark.queries import standard, std_olap_quality
 
     sf = "/root/testdata/sf0.001"
     li = load_table(spark, sf, "lineitem")
@@ -283,7 +283,7 @@ def test_quality_referential_fact_edge_bloom_and_preagg(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        standard._FK_BLOOM_CACHE.clear()
+        std_olap_quality._FK_BLOOM_CACHE.clear()
         out2 = standard.queries()["quality_referential"](spark, sf)
         plan2 = out2._jdf.queryExecution().executedPlan().toString()
         assert "xxhash64" in plan2, plan2
@@ -291,14 +291,16 @@ def test_quality_referential_fact_edge_bloom_and_preagg(spark):
         assert got2["lineitem_orders_fk"] == plain
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        standard._FK_BLOOM_CACHE.clear()
+        std_olap_quality._FK_BLOOM_CACHE.clear()
 
 
 def test_fk_threshold_conf_parse_human_forms(spark):
     """Regression (review r6): the broadcast-threshold gate must parse the
     documented human conf forms ('10MB', '1g'), not just the rendered
     '<n>b' form."""
-    from trafficbigdatasearch_spark.queries.standard import _parse_size_conf
+    from trafficbigdatasearch_spark.queries.std_olap_quality import (
+        _parse_size_conf,
+    )
 
     assert _parse_size_conf("-1") == -1
     assert _parse_size_conf("10485760") == 10485760

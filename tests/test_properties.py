@@ -18,7 +18,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from trafficbigdatasearch_spark.catalog import load_table
-from trafficbigdatasearch_spark.queries.standard import _dsum
+from trafficbigdatasearch_spark.queries._shared import _dsum
 
 SF = "/root/testdata/sf0.001"
 

@@ -598,7 +598,7 @@ def test_scratch_dirs_reused_per_artifact():
     create O(1) tempdirs, all under a single atexit-cleaned root."""
     import os
 
-    from trafficbigdatasearch_spark.queries import standard as S
+    from trafficbigdatasearch_spark.queries import std_textsim as S
 
     a = S._scratch("pin", SF)
     b = S._scratch("pin", SF)
@@ -960,7 +960,7 @@ def test_stream_hopping_under_rocksdb_provider(spark, sf_dir):
     batch operator — extends the provider pin from dedup state to the
     multi-window-per-event aggregation state (r10 continuation)."""
     from trafficbigdatasearch_spark.operators import timeseries as TS
-    from trafficbigdatasearch_spark.queries import standard as SQ
+    from trafficbigdatasearch_spark.queries import std_textsim as SQ
 
     key = "spark.sql.streaming.stateStore.providerClass"
     before = spark.conf.get(key, None)

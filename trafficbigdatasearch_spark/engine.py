@@ -29,6 +29,7 @@ from trafficbigdatasearch_spark.queries import (
     overspeed_count,
 )
 from trafficbigdatasearch_spark.queries._core import BBox, parse_date
+from trafficbigdatasearch_spark.session import stop_spark
 from trafficbigdatasearch_spark.sources import (
     read_accident_csv,
     read_fee_csv,
@@ -202,19 +203,16 @@ class TrafficEngine:
         # month's files; parquet: the month partition, which ingest tags from
         # the source directory) — a timestamp-derived month filter would
         # diverge for toll trips whose interval crosses the month boundary.
-        kwargs = {
-            "speed_data_today": self.speed_data(today_month),
-            "fee_data_today": self.fee_data(today_month),
-        }
         return average_speed(
             self.speed_base(),
             self.speed_data(months),
             self.fee_data(months),
             bbox,
             date,
+            speed_data_today=self.speed_data(today_month),
+            fee_data_today=self.fee_data(today_month),
             tz=self.tz,
             mode=self.mode,
-            **kwargs,
         )
 
     # --- JSON surface (reference parity, src/TrafficStatistics.scala:25-35) --
@@ -230,8 +228,7 @@ class TrafficEngine:
 
     def stop(self) -> None:
         """Teardown (src/TrafficStatistics.scala:37-40)."""
-        self.spark.catalog.clearCache()
-        self.spark.stop()
+        stop_spark(self.spark)
 
 
 def _path_exists(spark: SparkSession, path: str) -> bool:

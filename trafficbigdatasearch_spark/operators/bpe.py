@@ -156,10 +156,11 @@ def learn_merges(
     tests/test_bpe.py, including tie and conflict corpora).  This is the
     VERDICT r8 #4 scalability fix: a production 32k-merge vocabulary no
     longer pays ~2 jobs per merge of scheduler round-trips — measured at
-    sf0.01, 300 merges run ~8x fewer rounds (see SCALING.md's probe row;
-    tools/bpe_probe.py reproduces it).  One lazy ``localCheckpoint`` per
-    round truncates the replace lineage.  Stops early if no adjacent
-    pair remains."""
+    sf0.01, 300 merges run ~8x fewer rounds (SCALING.md's BPE merge
+    learning row; multi-merge rounds pinned by
+    tests/test_bpe.py::test_batched_accepts_disjoint_prefix_in_one_round).
+    One lazy ``localCheckpoint`` per round truncates the replace lineage.
+    Stops early if no adjacent pair remains."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
     if batch_size < 1:

@@ -326,10 +326,12 @@ def token_cosine_pairs(
 
 
 def _rarity_prefix_rows(ex, threshold: float):
-    """(prefix_rows, doc_sets) for the AllPairs cut — THE shared prefix
-    construction of :func:`ngram_jaccard_pairs_prefix` and
-    tools/prefix_probe.py (one definition, so the probe's evidence always
-    measures the shipped formula).
+    """(prefix_rows, doc_sets) for the AllPairs cut of
+    :func:`ngram_jaccard_pairs_prefix`.  Losslessness is pinned by
+    tests/test_dedup_edges.py::test_prefix_filtered_jaccard_equals_plain
+    and tests/test_properties.py::test_prefix_jaccard_lossless_property;
+    the candidate-volume evidence is SCALING.md's prefix-filtered Jaccard
+    join row.
 
     ``doc_sets`` = one per-doc aggregation (sorted distinct-shingle array);
     sizes derive from it (arrays are distinct and null-free by

@@ -37,6 +37,10 @@ from pyspark.sql import functions as F
 #: _PQ_PACK; :func:`quality_argmax_key` ENFORCES it at runtime.
 _ARGMAX_PACK = 1 << 31
 
+#: Convergence-check bound of the CC fixpoint loops — generous: 2^25 nodes
+#: converge well inside 25 contraction rounds.
+_CC_MAX_ROUNDS = 25
+
 
 def quality_argmax_key(major, minor):
     """Composite arg-max ordering key ``major * 2^31 - minor`` (major
@@ -153,9 +157,7 @@ def connected_components(
     id_b: str = "id_b",
     nodes: DataFrame | None = None,
     id_col: str = "id",
-    max_iterations: int = 25,
     cast: str | None = "bigint",
-    rounds_per_check: int = 1,
 ) -> DataFrame:
     """Resolve an undirected pair set into components.
 
@@ -175,20 +177,9 @@ def connected_components(
     set, so downstream consumers pay no recomputation.
 
     Raises ``RuntimeError`` if the edge set has not stabilized after
-    ``max_iterations`` convergence checks (``rounds_per_check`` large/small
-    contractions each; default 1 — see the in-loop comment for why batching
-    checks measured a loss) — a loud failure beats silently wrong clusters;
-    the bound is generous (2^25 nodes would converge well inside 25
-    contraction rounds).
+    ``_CC_MAX_ROUNDS`` convergence checks — a loud failure beats silently
+    wrong clusters.
     """
-    if rounds_per_check < 1:
-        # 0 contractions would make nxt == e at the first check and the
-        # loop would "converge" immediately, returning the raw small-star
-        # edge set as if it were the fixpoint — silently wrong components.
-        # Loud failure per module convention (advice r11).
-        raise ValueError(
-            f"rounds_per_check must be >= 1, got {rounds_per_check}"
-        )
     _id = (lambda c: F.col(c).cast(cast)) if cast else F.col
     raw = pairs.select(
         _id(id_a).alias("u"),
@@ -205,26 +196,10 @@ def connected_components(
     # the action that materializes them — one job per round, not two.
     e = _small_star(raw).localCheckpoint(eager=False)
     n_edges = e.count()
-    for _ in range(max_iterations):
-        nxt = e
-        # rounds_per_check contractions per driver sync.  Default 1 —
-        # batching checks was TRIED for the dbscan-jobs ruling (verdict
-        # r10 #5 option (b)) and MEASURED A LOSS, twice: a blind double
-        # round cost 1.5x on fast-converging banded-LSH edge sets
-        # (pipeline_mm_dedup 4.3->6.9 s), and even first-check-after-one-
-        # round adaptive geometry stayed 1.55x (interleaved same-process
-        # A/B, min 3.04 s vs 4.72 s) because typical dedup fixpoints
-        # converge at check 2: the overshoot contraction is several
-        # SHUFFLES while the saved sync is one count that rides the
-        # checkpoint materialization almost free — at 100 TB the ratio
-        # only worsens.  SCALING.md records the refutation; the parameter
-        # stays for callers that KNOW their fixpoint is deep.  Safe by
-        # idempotence either way: contractions past the fixpoint are
-        # identity maps, so any geometry yields the same star forest —
-        # oracle rows pin it.
-        for _r in range(rounds_per_check):
-            nxt = _small_star(_large_star(nxt))
-        nxt = nxt.localCheckpoint(eager=False)
+    for _ in range(_CC_MAX_ROUNDS):
+        # one contraction per check: batching checks measured 1.5x slower
+        # on typical dedup edge sets (SCALING.md)
+        nxt = _small_star(_large_star(e)).localCheckpoint(eager=False)
         # canonical distinct sets on both sides: equal counts + no rows
         # unique to one side <=> identical edge sets.  The previous round's
         # count is carried over, so each check costs one count job (which
@@ -238,7 +213,7 @@ def connected_components(
         e, n_edges = nxt, n_nxt
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} rounds"
+            f"connected_components did not converge in {_CC_MAX_ROUNDS} rounds"
         )
     # fixpoint edge set is a star forest: (member, root) edges only
     members = e.select(F.col("u").alias(id_col), F.col("v").alias("component"))
@@ -268,7 +243,6 @@ def incremental_components(
     id_b: str = "id_b",
     id_col: str = "id",
     comp_col: str = "component",
-    max_iterations: int = 25,
     cast: str | None = "bigint",
 ) -> DataFrame:
     """MAINTAIN an existing :func:`connected_components` labeling under a
@@ -347,7 +321,6 @@ def incremental_components(
         label_edges,
         id_a=id_a,
         id_b=id_b,
-        max_iterations=max_iterations,
         cast=None,  # ids already cast above
     ).select(F.col("id").alias("_old_lab"), F.col("component").alias("_root"))
     # relabel: ALL old rows through the (tiny, broadcast) label->root map

@@ -35,7 +35,7 @@ def partial_aggregate(
     """Collapse one slice (a partition / a day / a backfill chunk) to its
     mergeable partial state per key: (keys..., _n, _sum_c, _min_c, _max_c).
     ``value_cents`` is a Column of exact integer cents (see
-    queries/standard._cents) — integer partials keep every later merge
+    queries/_shared._cents) — integer partials keep every later merge
     order-independent and overflow-checked by ANSI mode."""
     return df.groupBy(*keys).agg(
         F.count("*").alias("_n"),

@@ -18,10 +18,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """All PushedFilters entries of every scan in the plan."""
     out = []
@@ -50,7 +46,3 @@ def exchange_count(df: DataFrame) -> int:
     partitioning on a separate Arguments line."""
     plan = formatted_plan(df)
     return len(re.findall(r"\(\d+\) Exchange\s*$", plan, re.M))
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", simple_plan(df))))

@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 from trafficbigdatasearch_spark.queries._core import (
     BBox,
     months_in_range,
-    next_month,
     car_type_col,
     date_millis,
     join_stations,
@@ -66,19 +65,14 @@ def average_speed(
     fee_data: DataFrame,
     bbox: BBox,
     date: str,
+    speed_data_today: DataFrame,
+    fee_data_today: DataFrame,
     tz: dt.tzinfo = dt.timezone.utc,
     mode: str = "parity",
-    speed_data_today: DataFrame | None = None,
-    fee_data_today: DataFrame | None = None,
 ) -> DataFrame:
-    """``speed_data_today``/``fee_data_today`` optionally supply the query
-    month's tables exactly as the reference's per-file reads do
-    (src/AverageSpeed.scala:33-34); ``TrafficEngine`` always passes them
-    (file-month / partition-month selection).  When omitted they are
-    approximated from the full tables by TIMESTAMP-month predicates — which
-    diverges from the reference for toll trips whose interval crosses a
-    month boundary (the trip lives in one month's file but its ENTIME can
-    fall in another); prefer passing the slices.
+    """``speed_data_today``/``fee_data_today`` are the query month's tables,
+    selected by file month exactly as the reference's per-file reads do
+    (src/AverageSpeed.scala:33-34).
 
     ``tz`` MUST match the Spark session timezone (boundaries use ``tz``,
     month keys and row parsing use the session zone — ``TrafficEngine``
@@ -91,33 +85,16 @@ def average_speed(
 
     # --- today branch (query month's data only, src/AverageSpeed.scala:31-34)
     today_src = start if mode == "parity" else end  # quirk §2.10.4
-    today_base = (
-        speed_data_today
-        if speed_data_today is not None
-        else speed_data.filter(
-            (F.col("WZSMonthOfYear") == end.month) & (F.col("WZSJYear") == end.year)
-        )
-    )
-    today_obs = today_base.filter(
+    today_obs = speed_data_today.filter(
         (F.col("WZSJDayOfMonth") == today_src.day)
         & (F.col("WZSMonthOfYear") == today_src.month)
         & (F.col("WZSJYear") == today_src.year)
     )
     # The reference's today interval-join uses only the query month's toll
-    # file (src/AverageSpeed.scala:108).  The fallback below approximates
-    # that by ENTIME month — see the docstring caveat.
-    if fee_data_today is not None:
-        fee_today = fee_data_today
-    else:
-        fee_month_ms_lo = date_millis(end.replace(day=1), tz)
-        fee_month_ms_hi = date_millis(next_month(end), tz)
-        fee_today = fee_data.filter(
-            (F.col("ENTIMEMillis") >= fee_month_ms_lo)
-            & (F.col("ENTIMEMillis") < fee_month_ms_hi)
-        )
+    # file (src/AverageSpeed.scala:108).
     today = _segment_avg(
         join_toll_class(
-            join_stations(today_obs, guids), fee_today, month_key=(mode == "parity")
+            join_stations(today_obs, guids), fee_data_today, month_key=(mode == "parity")
         ),
         time_point=1,
     )

@@ -22,17 +22,10 @@ from __future__ import annotations
 # into it ON IMPORT, in the original top-to-bottom order (registration
 # order is load-bearing: the driver verifies the first 50 entries); the
 # _WINDOW reorder below then mutates the dict IN PLACE so every
-# importer observes the driver ordering.  Policy + full rotation
-# ledger: ROTATION.md.
-from ._shared import (  # noqa: F401  (re-exported facade)
-    QueryFn,
-    _REGISTRY,
-    _cents,
-    _dsum,
-    oracle_sql,
-    queries,
-    register,
-)
+# importer observes the driver ordering.  Helpers live in the module
+# that owns them (_shared, std_*); import them from there.  Policy +
+# full rotation ledger: ROTATION.md.
+from ._shared import _REGISTRY, oracle_sql, queries  # noqa: F401  (re-exported)
 from . import std_core  # noqa: F401,E402  isort:skip
 from . import std_textsim  # noqa: F401,E402  isort:skip
 from . import std_tpch_sampling  # noqa: F401,E402  isort:skip
@@ -43,30 +36,6 @@ from . import std_graph_eval  # noqa: F401,E402  isort:skip
 from . import std_r11  # noqa: F401,E402  isort:skip
 from . import std_r12  # noqa: F401,E402  isort:skip
 from . import std_r13  # noqa: F401,E402  isort:skip
-from . import _shared  # noqa: F401,E402  isort:skip
-
-#: Era modules in registration order — also the __getattr__ search order.
-_ERA_MODULES = (
-    _shared, std_core, std_textsim, std_tpch_sampling, std_spatial_incr,
-    std_olap_quality, std_retrieval, std_graph_eval, std_r11, std_r12,
-    std_r13,
-)
-
-
-def __getattr__(name: str):
-    """Pre-split compatibility (PEP 562): tests and tools that reached
-    registry internals as ``standard.<helper>`` (approx_sketches_raw,
-    _scratch, _SCRATCH_ROOT, _FK_BLOOM_CACHE, ...) resolve against the
-    era module that owns them now.  Dynamic on purpose — _SCRATCH_ROOT is
-    REBOUND by _scratch at runtime, so a static ``from ... import`` would
-    freeze the pre-call value."""
-    for _m in _ERA_MODULES:
-        if hasattr(_m, name):
-            return getattr(_m, name)
-    raise AttributeError(
-        f"module {__name__!r} has no attribute {name!r} "
-        "(searched _shared and the std_* era modules)"
-    )
 
 _WINDOW = [
     # --- stable flagship slots (22, unchanged from r10: one flagship per
