@@ -449,6 +449,12 @@ def test_pq_gemm_kernel_bit_identical_to_expr(spark):
         )
     )
     assert ta == tb and ta
+    # an unknown kernel fails at build time, before any Spark job
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup(None)
+    with pytest.raises(ValueError, match="kernel"):
+        similarity.pq_codes(emb, m=8, centroid_stride=97, kernel="GEMM")
+    assert tracker.getJobIdsForGroup(None) == before
 
     def canon_cb(df):
         return sorted(
@@ -466,8 +472,8 @@ def test_pq_gemm_kernel_bit_identical_to_expr(spark):
 
 
 def test_assign_gemm_kernel_bit_identical_to_expr(spark):
-    """The Arrow GEMM coarse-assignment kernel (r14,
-    similarity._argmax_cell_gemm) must reproduce the crossJoin + min_by
+    """The Arrow GEMM coarse-assignment kernel (r14, the ``kernel="gemm"``
+    branch of similarity._nearest_cell) must reproduce the crossJoin + min_by
     expression fold byte-for-byte across every wired seam: the int64
     lattice dot is exact and the cosine is the identical
     cast->sqrt->multiply->divide IEEE sequence, with first-occurrence
@@ -502,6 +508,18 @@ def test_assign_gemm_kernel_bit_identical_to_expr(spark):
         )
     )
     assert a == b
+    # an unknown kernel fails at build time, before any Spark job — even
+    # where validate=True would otherwise run its centroid probe first
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup(None)
+    for build in (
+        lambda: similarity.ivf_topk(emb, q, kernel="GEMM"),
+        lambda: similarity.ivf_topk(emb, q, validate=True, kernel="gemm "),
+        lambda: similarity.semantic_incremental_dedup(corpus, new, kernel="GEMM"),
+    ):
+        with pytest.raises(ValueError, match="kernel"):
+            build()
+    assert tracker.getJobIdsForGroup(None) == before
 
 
 def test_attribution_linear_exact_shares(spark):

@@ -106,6 +106,31 @@ def test_ensure_compute_width_identity_on_wide_input(spark):
     assert out is wide
 
 
+def test_ensure_compute_width_bucketed_table_passthrough(spark, tmp_path):
+    """A bucketed table is returned untouched even when its file-split
+    count is below the session width: the bare scan reports one split per
+    bucket file, and a repartition above it would switch the bucketed scan
+    off, bringing back the exchanges the layout removes."""
+    from trafficbigdatasearch_spark.sources.parquet import write_bucketed
+
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_buckets = max(1, width // 2)
+    table = "tbds_test_bucketed_passthrough"
+    src = spark.range(0, 1_000).select(
+        F.col("id").alias("user_id"), (F.col("id") * 2).alias("v")
+    )
+    write_bucketed(
+        src.coalesce(1), table, ["user_id"], n_buckets,
+        path=str(tmp_path / "bkt"),
+    )
+    try:
+        bucketed = spark.table(table)
+        assert bucketed.rdd.getNumPartitions() < width
+        assert P.ensure_compute_width(bucketed, "user_id") is bucketed
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 def test_ensure_compute_width_streaming_passthrough(spark, tmp_path):
     """Streaming frames pass through (the .rdd partition probe is illegal
     on a stream) — pinned by the stream_gopher_gate incident (r13)."""

@@ -58,9 +58,10 @@ pinned), zero shuffle, ~4x the encode throughput.  The mapInPandas plan
 below therefore shows no join for the codebook side.""",
     "sim_pq_trained_topk": """Round 4: the trainer materializes its tiny
 codebook per Lloyd iteration (exponential-lineage guard) and runs each
-assignment pass through the same Arrow GEMM kernel as the encoder;
-encoding and the ADC LUT both consume the trained codebook through the
-standard `centroids` seam.""",
+assignment pass through the IVF coarse-assignment GEMM kernel
+(`similarity._nearest_cell`, max-cosine argmax), not the encoder's
+per-subspace L2 kernel; encoding and the ADC LUT both consume the trained
+codebook through the standard `centroids` seam.""",
 }
 
 

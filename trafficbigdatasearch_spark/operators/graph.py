@@ -26,7 +26,7 @@ computation; every per-round job is fully distributed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -452,6 +452,30 @@ def pagerank_integer(
 
     base = ((damping_den - damping_num) * scale) // (damping_den * n)
     r = node_df.withColumn("rank", F.lit(scale // n).cast("bigint"))
+    return _pagerank_rounds(
+        ew, node_df, r, F.lit(base), n_iter, damping_num, damping_den
+    )
+
+
+def _pagerank_rounds(
+    ew: DataFrame,
+    node_df: DataFrame,
+    r: DataFrame,
+    base: Column,
+    n_iter: int,
+    damping_num: int,
+    damping_den: int,
+) -> DataFrame:
+    """The integer power iteration shared by :func:`pagerank_integer` and
+    :func:`personalized_pagerank_integer`.  Per round, one hash join of the
+    out-edges ``ew`` (u, v, _d) against the ranks ``r`` (id, rank) and one
+    map-side-combined aggregate give each node's summed contribution; then
+
+        r'(id) = base + (damping_num * Σ contrib) div damping_den
+
+    where ``base`` is a column over ``node_df`` (a constant for global
+    PageRank, the seed-only teleport for the personalized variant).  Each
+    round's ranks are lazily checkpointed to cut lineage."""
     for _ in range(n_iter):
         insum = (
             ew.join(r, ew["u"] == r["id"])
@@ -464,7 +488,7 @@ def pagerank_integer(
             .select(
                 "id",
                 (
-                    F.lit(base)
+                    base
                     + F.expr(
                         f"({damping_num} * coalesce(_s, 0L)) div {damping_den}"
                     )
@@ -842,27 +866,15 @@ def personalized_pagerank_integer(
         .cast("bigint")
         .alias("rank"),
     )
-    for _ in range(n_iter):
-        insum = (
-            ew.join(r, ew["u"] == r["id"])
-            .select(F.col("v"), F.expr("rank div _d").alias("_c"))
-            .groupBy("v")
-            .agg(F.sum("_c").alias("_s"))
-        )
-        r = (
-            marked.join(insum, marked["id"] == insum["v"], "left")
-            .select(
-                "id",
-                (
-                    F.when(F.col("_seed"), F.lit(base)).otherwise(F.lit(0))
-                    + F.expr(
-                        f"({damping_num} * coalesce(_s, 0L)) div {damping_den}"
-                    )
-                ).cast("bigint").alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return r
+    return _pagerank_rounds(
+        ew,
+        marked,
+        r,
+        F.when(F.col("_seed"), F.lit(base)).otherwise(F.lit(0)),
+        n_iter,
+        damping_num,
+        damping_den,
+    )
 
 
 def jaccard_link_prediction(

@@ -10,6 +10,20 @@
   it's oracle-checkable in SQL.
 - ``embedding_near_dup_pairs``: near-duplicate detection by cosine threshold
   with label blocking / LSH blocking.
+- IVF (``ivf_topk``, ``build_ivf_index``, ``ivf_adc_topk``, ...) and PQ
+  (``pq_codes``, ``pq_adc_topk``, ``pq_train_codebook``, ...) operators,
+  composed from one private helper per building block:
+
+  - ``_topk_per_query`` / ``_adc_topk``: per-query ranking by cosine
+    (descending) or exact ADC distance (ascending), neighbor-id tie-break;
+  - ``_coarse_centroids``: the stride-sample (or supplied) coarse
+    quantizer, quantized to (cell, mv, mn);
+  - ``_nearest_cell``: each vector's nearest centroid(s) — the expression
+    fold and the bit-identical Arrow GEMM kernel behind one ``kernel=``
+    switch;
+  - ``_probe_cells``: each query's ``nprobe`` nearest cells;
+  - ``_pq_codebook`` / ``_subspace_sq_dist``: the dense-ranked PQ codebook
+    and the exact per-subspace squared L2 distance.
 
 All scores go through ``functions.vectors`` quantized arithmetic: integer
 dot products -> bit-identical across engines (see that module's docstring).
@@ -17,17 +31,27 @@ dot products -> bit-identical across engines (see that module's docstring).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from trafficbigdatasearch_spark import partitioning as P
 from trafficbigdatasearch_spark.functions import vectors as V
 
 
-def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
-    """Deterministic per-query top-k: score desc, neighbor_id asc tie-break.
-    ONE home for the tie-break contract — brute/LSH/IVF results must stay
-    comparable (recall is measured against the brute baseline)."""
+def _topk_per_query(pairs: DataFrame, k: int) -> DataFrame:
+    """Deterministic per-query top-k over candidate ``pairs`` (query_id,
+    neighbor_id, qv, qn, cv, cn): exact quantized cosine ``score``, ranked
+    score desc, neighbor_id asc tie-break -> (query_id, neighbor_id, rank,
+    score).  ONE home for the tie-break contract — brute/LSH/IVF/PQ-rerank
+    results must stay comparable (recall is measured against the brute
+    baseline)."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        V.cosine_from_parts(
+            V.dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")
+        ).alias("score"),
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("neighbor_id").asc()
     )
@@ -65,65 +89,180 @@ def _with_quantized(
     return df
 
 
-def _argmax_cell_gemm(
-    c: DataFrame, cq: DataFrame, id_name: str, cell_name: str
+#: the two implementations behind every ``kernel=`` switch: the lazy
+#: Catalyst expression fold and the bit-identical Arrow GEMM kernel
+_KERNELS = ("expr", "gemm")
+
+
+def _check_kernel(kernel: str) -> None:
+    """Reject an unknown ``kernel=`` at build time, before any Spark job —
+    a typo (or ``"GEMM"``) must not silently run the expression path."""
+    if kernel not in _KERNELS:
+        raise ValueError(f"kernel must be one of {_KERNELS}, got {kernel!r}")
+
+
+def _coarse_centroids(
+    corpus: DataFrame,
+    centroid_stride: int,
+    id_col: str,
+    vec_col: str,
+    cell_name: str = "cell_id",
+    centroids: DataFrame | None = None,
+    centroid_id_col: str = "cell_id",
+    centroid_vec_col: str = "centroid",
+    empty_error: str | None = None,
 ) -> DataFrame:
-    """Arrow GEMM coarse-assignment kernel: nearest (max-cosine) centroid
-    per corpus vector, ties to the smaller cell id — the vectorized twin of
-    the ``crossJoin(broadcast(cq)) + min_by`` expression fold shared by the
-    IVF family.  The centroid table (tiny by construction — it is broadcast
-    everywhere else) is collected ONCE (one small eager job, the
-    ``_pq_codes_gemm`` trade), then the corpus streams through
-    ``mapInPandas`` with one int64 matrix product per batch — map-only, no
-    shuffle, ~50x the interpreted fold's throughput (r14 stage ledger: the
-    expr assignment burned 118 s of task time on a 10 k x 103 corpus at the
-    5x fixture; the kernel does the same lattice math in under a second).
+    """The IVF coarse quantizer, quantized: (cell_name, mv, mn).  Centroids
+    are the deterministic corpus sample ``id % centroid_stride == 0`` (the
+    sampled vector's id is its cell id), or the supplied ``centroids``
+    table (centroid_id_col, centroid_vec_col).  ``empty_error`` is the
+    ``validate`` option: when set, one eager ``isEmpty`` job raises
+    ``ValueError(empty_error)`` on an empty centroid set; when None the
+    build stays lazy (zero jobs)."""
+    if centroids is None:
+        cent = corpus.filter((F.col(id_col) % centroid_stride) == 0)
+        src_id, src_vec = id_col, vec_col
+    else:
+        cent, src_id, src_vec = centroids, centroid_id_col, centroid_vec_col
+    if empty_error is not None and cent.isEmpty():
+        raise ValueError(empty_error)
+    return _with_quantized(cent, src_vec, "mv", "mn").select(
+        F.col(src_id).alias(cell_name), "mv", "mn"
+    )
 
-    BIT-IDENTICAL to the expression path: the lattice dot product is exact
-    in int64 (and below 2^53), and the cosine is the same
-    cast -> sqrt -> multiply -> divide sequence of correctly-rounded IEEE
-    ops as ``vectors.cosine_from_parts``; ``argmax`` takes the first
-    occurrence among ties over the cell-ascending centroid matrix — the
-    same tie-break as ``min_by(struct(-csim, cell))``.  Zero norms raise
-    (loud failure per module convention) instead of reproducing the
-    expression path's accidental NULL-ordering assignment.
 
-    Expects ``c`` = (id_name, cv, cn) and ``cq`` = (cell_name, mv, mn),
-    both already quantized; returns (id_name, cell_name)."""
-    import numpy as np
-    import pandas as pd
+def _nearest_cell(
+    c: DataFrame,
+    cq: DataFrame,
+    id_name: str,
+    cell_name: str,
+    n: int = 1,
+    kernel: str = "expr",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(id_name, cell_name, *carry): each quantized vector's ``n`` nearest
+    (max-cosine) centroids, ties to the smaller cell id — the one
+    coarse-assignment stage of every IVF/PQ operator.  Expects ``c`` =
+    (id_name, cv, cn, ...) and ``cq`` = (cell_name, mv, mn), both already
+    quantized; ``carry`` names columns of ``c`` passed through unchanged.
 
-    cb_rows = cq.orderBy(cell_name).collect()
-    schema = f"{id_name} bigint, {cell_name} bigint"
-    if not cb_rows:
-        # no centroids -> no assignments (the expression path's empty agg)
-        return c.sparkSession.createDataFrame([], schema)
-    C = np.stack([np.asarray(r["mv"], dtype=np.int64) for r in cb_rows])
-    ids = np.asarray([r[cell_name] for r in cb_rows], dtype=np.int64)
-    mn = np.sqrt(np.asarray([r["mn"] for r in cb_rows], dtype=np.int64)
-                 .astype(np.float64))
-    if (mn == 0).any():
-        raise ValueError("_argmax_cell_gemm: zero-norm centroid")
-    bc = c.sparkSession.sparkContext.broadcast((C, ids, mn))
+    ``kernel="expr"``: broadcast ``cq`` and fold ``min_by`` over
+    struct(-cosine, cell) — a map-side-combinable aggregate, no per-vector
+    window; ``n > 1`` ranks with a window partitioned on the vector id
+    instead (still no global exchange).
 
-    def assign(batches):
-        Cb, cell_ids, mnf = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            U = np.stack(pdf["cv"].to_numpy()).astype(np.int64)
-            un = np.sqrt(pdf["cn"].to_numpy().astype(np.float64))
-            if (un == 0).any():
-                raise ValueError("_argmax_cell_gemm: zero-norm vector")
-            S = (U @ Cb.T).astype(np.float64) / (un[:, None] * mnf[None, :])
-            yield pd.DataFrame(
-                {
-                    id_name: pdf[id_name].to_numpy(),
-                    cell_name: cell_ids[S.argmax(axis=1)],
-                }
-            )
+    ``kernel="gemm"`` (``n == 1``; the window needs every cosine): the
+    tiny centroid table is collected ONCE (one small eager job), then the
+    vectors stream through ``mapInPandas`` with one int64 matrix product
+    per batch — map-only, ~50x the interpreted fold's throughput (r14: 118
+    s of task time -> under a second on a 10 k x 103 corpus at the 5x
+    fixture).  BIT-IDENTICAL to the expression path: the lattice dot
+    product is exact in int64 (below 2^53), the cosine is the same
+    cast -> sqrt -> multiply -> divide IEEE sequence as
+    ``vectors.cosine_from_parts``, and first-occurrence ``argmax`` over the
+    cell-ascending matrix is the ``min_by(struct(-csim, cell))`` tie-break.
+    Zero norms raise (loud failure per module convention) instead of
+    reproducing the expression path's accidental NULL-ordering
+    assignment."""
+    _check_kernel(kernel)
+    if kernel == "gemm" and n == 1:
+        import numpy as np
+        import pandas as pd
 
-    return c.select(id_name, "cv", "cn").mapInPandas(assign, schema)
+        cb_rows = cq.orderBy(cell_name).collect()
+        schema = ", ".join(
+            [f"{id_name} bigint", f"{cell_name} bigint"]
+            + [f"{x} {c.schema[x].dataType.simpleString()}" for x in carry]
+        )
+        if not cb_rows:
+            # no centroids -> no assignments (the expression path's empty agg)
+            return c.sparkSession.createDataFrame([], schema)
+        C = np.stack([np.asarray(r["mv"], dtype=np.int64) for r in cb_rows])
+        ids = np.asarray([r[cell_name] for r in cb_rows], dtype=np.int64)
+        mn = np.sqrt(np.asarray([r["mn"] for r in cb_rows], dtype=np.int64)
+                     .astype(np.float64))
+        if (mn == 0).any():
+            raise ValueError("_nearest_cell: zero-norm centroid")
+        bc = c.sparkSession.sparkContext.broadcast((C, ids, mn))
+
+        def assign(batches):
+            Cb, cell_ids, mnf = bc.value
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                U = np.stack(pdf["cv"].to_numpy()).astype(np.int64)
+                un = np.sqrt(pdf["cn"].to_numpy().astype(np.float64))
+                if (un == 0).any():
+                    raise ValueError("_nearest_cell: zero-norm vector")
+                S = (U @ Cb.T).astype(np.float64) / (un[:, None] * mnf[None, :])
+                out = pd.DataFrame(
+                    {
+                        id_name: pdf[id_name].to_numpy(),
+                        cell_name: cell_ids[S.argmax(axis=1)],
+                    }
+                )
+                for x in carry:
+                    out[x] = pdf[x].to_numpy()
+                yield out
+
+        cols = dict.fromkeys([id_name, "cv", "cn", *carry])
+        return c.select(*cols).mapInPandas(assign, schema)
+    sim = c.crossJoin(F.broadcast(cq)).select(
+        id_name,
+        cell_name,
+        *carry,
+        V.cosine_from_parts(
+            V.dot(F.col("cv"), F.col("mv")), F.col("cn"), F.col("mn")
+        ).alias("csim"),
+    )
+    if n > 1:
+        w = Window.partitionBy(id_name).orderBy(
+            F.col("csim").desc(), F.col(cell_name).asc()
+        )
+        return (
+            sim.withColumn("_r", F.row_number().over(w))
+            .filter(F.col("_r") <= n)
+            .select(id_name, cell_name, *carry)
+        )
+    order = F.struct((-F.col("csim")).alias("d"), F.col(cell_name))
+    if not carry:
+        return sim.groupBy(id_name).agg(
+            F.min_by(F.col(cell_name), order).alias(cell_name)
+        )
+    return sim.groupBy(id_name).agg(
+        F.min_by(F.struct(cell_name, *carry), order).alias("m")
+    ).select(id_name, *[F.col(f"m.{x}").alias(x) for x in (cell_name, *carry)])
+
+
+def _probe_cells(
+    q: DataFrame,
+    cq: DataFrame,
+    cell_name: str,
+    n: int,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(query_id, cell_name, *carry): each query's ``n`` nearest cells
+    (``nprobe``) against the broadcast centroid table, ties to the smaller
+    cell id.  ``q`` = (query_id, qv, qn, ...) and ``cq`` = (cell_name, mv,
+    mn), both quantized; ``carry`` names columns of ``q`` kept on every
+    probe row."""
+    pw = Window.partitionBy("query_id").orderBy(
+        F.col("psim").desc(), F.col(cell_name).asc()
+    )
+    return (
+        q.crossJoin(F.broadcast(cq))
+        .select(
+            "query_id",
+            cell_name,
+            *carry,
+            V.cosine_from_parts(
+                V.dot(F.col("qv"), F.col("mv")), F.col("qn"), F.col("mn")
+            ).alias("psim"),
+        )
+        .withColumn("_r", F.row_number().over(pw))
+        .filter(F.col("_r") <= n)
+        .select("query_id", cell_name, *carry)
+    )
 
 
 def brute_force_topk(
@@ -147,18 +286,8 @@ def brute_force_topk(
     c = _with_quantized(corpus, vec_col, "cv", "cn", spread_on=id_col).select(
         F.col(id_col).alias("neighbor_id"), "cv", "cn"
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            V.cosine_from_parts(
-                V.dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")
-            ).alias("score"),
-        )
-    )
-    return _topk_per_query(scored, k)
+    pairs = c.crossJoin(F.broadcast(q))
+    return _topk_per_query(pairs.filter(F.col("neighbor_id") != F.col("query_id")), k)
 
 
 def bucket_assignments(
@@ -207,18 +336,8 @@ def lsh_bucketed_topk(
         "cn",
         V.simhash_bucket(F.col("cv"), n_planes, dims).alias("bucket"),
     )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            V.cosine_from_parts(
-                V.dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")
-            ).alias("score"),
-        )
-    )
-    return _topk_per_query(scored, k)
+    pairs = c.join(F.broadcast(q), "bucket")
+    return _topk_per_query(pairs.filter(F.col("neighbor_id") != F.col("query_id")), k)
 
 
 def ivf_topk(
@@ -261,46 +380,25 @@ def ivf_topk(
     EQUALS :func:`brute_force_topk` (tests/test_oracle_fuzz.py) — the
     recall loss lives entirely in the probe subset, never the rerank.
     """
+    _check_kernel(kernel)  # before validate's eager job
     if centroids is None:
-        cent = corpus.filter((F.col(id_col) % centroid_stride) == 0)
-        if validate and cent.isEmpty():
-            raise ValueError(
-                f"no centroids: no {id_col} is a multiple of {centroid_stride} — "
-                f"lower centroid_stride (results would be silently empty)"
-            )
-        cq = _with_quantized(cent, vec_col, "mv", "mn").select(
-            F.col(id_col).alias("cell_id"), "mv", "mn"
+        empty = (
+            f"no centroids: no {id_col} is a multiple of {centroid_stride} — "
+            f"lower centroid_stride (results would be silently empty)"
         )
     else:
-        if validate and centroids.isEmpty():
-            raise ValueError("no centroids: the supplied centroid table is empty")
-        cq = _with_quantized(centroids, centroid_vec_col, "mv", "mn").select(
-            F.col(centroid_id_col).alias("cell_id"), "mv", "mn"
-        )
+        empty = "no centroids: the supplied centroid table is empty"
+    cq = _coarse_centroids(
+        corpus, centroid_stride, id_col, vec_col, centroids=centroids,
+        centroid_id_col=centroid_id_col, centroid_vec_col=centroid_vec_col,
+        empty_error=empty if validate else None,
+    )
     c = _with_quantized(corpus, vec_col, "cv", "cn", spread_on=id_col).select(
         F.col(id_col).alias("neighbor_id"), "cv", "cn"
     )
-    # nearest centroid per corpus vector: broadcast + map-side min_by argmin
-    # (ties broken toward the smaller cell_id via the struct's lexicographic
-    # order), then re-attach the vector — no per-vector window shuffle.
-    # kernel="gemm" swaps the interpreted fold for the bit-identical Arrow
-    # numpy kernel (_argmax_cell_gemm — one small eager centroid collect).
-    if kernel == "gemm":
-        assign = _argmax_cell_gemm(c, cq, "neighbor_id", "cell_id")
-    else:
-        sim = c.crossJoin(F.broadcast(cq)).select(
-            "neighbor_id",
-            "cell_id",
-            V.cosine_from_parts(
-                V.dot(F.col("cv"), F.col("mv")), F.col("cn"), F.col("mn")
-            ).alias("csim"),
-        )
-        assign = sim.groupBy("neighbor_id").agg(
-            F.min_by(
-                F.col("cell_id"),
-                F.struct((-F.col("csim")).alias("d"), F.col("cell_id")),
-            ).alias("cell_id")
-        )
+    # nearest centroid per corpus vector, then re-attach the vector — no
+    # per-vector window shuffle
+    assign = _nearest_cell(c, cq, "neighbor_id", "cell_id", kernel=kernel)
     return _ivf_probe_rerank(
         c.join(assign, "neighbor_id"), cq, queries, k, nprobe, vec_col, query_id_col
     )
@@ -324,41 +422,9 @@ def _ivf_probe_rerank(
     q = _with_quantized(queries, vec_col, "qv", "qn").select(
         F.col(query_id_col).alias("query_id"), "qv", "qn"
     )
-    pw = Window.partitionBy("query_id").orderBy(
-        F.col("psim").desc(), F.col("cell_id").asc()
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cq))
-        .select(
-            "query_id",
-            "cell_id",
-            "qv",
-            "qn",
-            V.cosine_from_parts(
-                V.dot(F.col("qv"), F.col("mv")), F.col("qn"), F.col("mn")
-            ).alias("psim"),
-        )
-        .withColumn("_r", F.row_number().over(pw))
-        .filter(F.col("_r") <= nprobe)
-        .select("query_id", "cell_id", "qv", "qn")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        indexed.join(F.broadcast(probes), "cell_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            V.cosine_from_parts(
-                V.dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")
-            ).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    probes = _probe_cells(q, cq, "cell_id", nprobe, carry=("qv", "qn"))
+    pairs = indexed.join(F.broadcast(probes), "cell_id")
+    return _topk_per_query(pairs.filter(F.col("neighbor_id") != F.col("query_id")), k)
 
 
 def build_ivf_index(
@@ -387,40 +453,17 @@ def build_ivf_index(
     Same centroid options as :func:`ivf_topk` (deterministic sample, or
     trained centroids e.g. from :func:`kmeans_refine`).
     """
-    if centroids is None:
-        cent = corpus.filter((F.col(id_col) % centroid_stride) == 0)
-        cq = _with_quantized(cent, vec_col, "mv", "mn").select(
-            F.col(id_col).alias("cell_id"), "mv", "mn"
-        )
-    else:
-        cq = _with_quantized(centroids, centroid_vec_col, "mv", "mn").select(
-            F.col(centroid_id_col).alias("cell_id"), "mv", "mn"
-        )
+    cq = _coarse_centroids(
+        corpus, centroid_stride, id_col, vec_col, centroids=centroids,
+        centroid_id_col=centroid_id_col, centroid_vec_col=centroid_vec_col,
+    )
     c = _with_quantized(corpus, vec_col, "cv", "cn").select(
         F.col(id_col).alias("neighbor_id"), "cv", "cn"
     )
-    c.join(_nearest_cell(c, cq), "neighbor_id").write.mode(mode).partitionBy(
-        "cell_id"
-    ).parquet(f"{path}/inverted")
+    c.join(
+        _nearest_cell(c, cq, "neighbor_id", "cell_id"), "neighbor_id"
+    ).write.mode(mode).partitionBy("cell_id").parquet(f"{path}/inverted")
     cq.write.mode(mode).parquet(f"{path}/centroids")
-
-
-def _nearest_cell(c: DataFrame, cq: DataFrame) -> DataFrame:
-    """(neighbor_id, cell_id) argmax-cosine assignment of quantized vectors
-    ``c`` (neighbor_id, cv, cn) against broadcast quantized centroids ``cq``
-    (cell_id, mv, mn); ties break to the smallest cell_id."""
-    sim = c.crossJoin(F.broadcast(cq)).select(
-        "neighbor_id",
-        "cell_id",
-        V.cosine_from_parts(
-            V.dot(F.col("cv"), F.col("mv")), F.col("cn"), F.col("mn")
-        ).alias("csim"),
-    )
-    return sim.groupBy("neighbor_id").agg(
-        F.min_by(
-            F.col("cell_id"), F.struct((-F.col("csim")).alias("d"), F.col("cell_id"))
-        ).alias("cell_id")
-    )
 
 
 def ivf_index_append(
@@ -457,9 +500,9 @@ def ivf_index_append(
     c = _with_quantized(new_corpus, vec_col, "cv", "cn").select(
         F.col(id_col).alias("neighbor_id"), "cv", "cn"
     )
-    c.join(_nearest_cell(c, cq), "neighbor_id").write.mode("append").partitionBy(
-        "cell_id"
-    ).parquet(f"{path}/inverted")
+    c.join(
+        _nearest_cell(c, cq, "neighbor_id", "cell_id"), "neighbor_id"
+    ).write.mode("append").partitionBy("cell_id").parquet(f"{path}/inverted")
 
 
 def ivf_topk_indexed(
@@ -648,17 +691,15 @@ def pq_train_codebook(
     unit-lattice members are lazily checkpointed once and reused across
     iterations — the "cache the training set" step of any k-means run.
 
-    ``kernel="gemm"`` swaps each assignment pass's interpreted expression
-    fold for an Arrow numpy kernel over the per-iteration codebook (already
-    materialized, so the collect is free): integer dot products and the
-    identical cast/sqrt/multiply/divide sequence produce the same IEEE
-    doubles, and ``argmax`` first-occurrence over the cell-ascending
-    codebook is the same tie-break as the ``min_by`` struct — parity
-    pinned in tests.
+    Each assignment pass is :func:`_nearest_cell` carrying the member
+    vector through, so ``kernel="gemm"`` runs the same bit-identical Arrow
+    kernel as IVF assignment over the per-iteration codebook (already
+    materialized, so its collect is cheap) — parity pinned in tests.
     """
     c = _with_quantized(corpus, vec_col, "cv", "cn", spread_on=id_col).select(
         F.col(id_col).alias("vid"), "cv", "cn"
     )
+    # the unit-lattice members u, named (cv, cn) for _nearest_cell
     u = (
         c.select(
             "vid",
@@ -667,9 +708,9 @@ def pq_train_codebook(
                 lambda x: F.round(
                     x.cast("double") * V.QUANT / F.sqrt(F.col("cn").cast("double"))
                 ).cast("bigint"),
-            ).alias("uv"),
+            ).alias("cv"),
         )
-        .withColumn("un", V.sq_norm(F.col("uv")))
+        .withColumn("cn", V.sq_norm(F.col("cv")))
         .localCheckpoint(eager=False)
     )
     cb = (
@@ -682,57 +723,11 @@ def pq_train_codebook(
             "mv",
         )
     )
-    def _assign_gemm(cb_df: DataFrame) -> DataFrame:
-        import numpy as np
-        import pandas as pd
-
-        cb_rows = cb_df.orderBy("cell_id").collect()
-        out_schema = "vid bigint, cell_id bigint, uv array<bigint>"
-        if not cb_rows:
-            return u.sparkSession.createDataFrame([], out_schema)
-        C = np.stack([np.asarray(r["mv"], dtype=np.int64) for r in cb_rows])
-        cids = np.asarray([r["cell_id"] for r in cb_rows], dtype=np.int64)
-        bcast = u.sparkSession.sparkContext.broadcast((C, cids))
-
-        def assign_fn(batches, _bc=bcast):
-            Cb, ids = _bc.value
-            mn = np.sqrt((Cb * Cb).sum(axis=1).astype(np.float64))
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                U = np.stack(pdf["uv"].to_numpy()).astype(np.int64)
-                un = np.sqrt((U * U).sum(axis=1).astype(np.float64))
-                S = (U @ Cb.T).astype(np.float64) / (un[:, None] * mn[None, :])
-                out = pd.DataFrame(
-                    {"vid": pdf["vid"].to_numpy(), "cell_id": ids[S.argmax(axis=1)]}
-                )
-                out["uv"] = pdf["uv"].to_numpy()
-                yield out
-        return u.mapInPandas(assign_fn, out_schema)
-
     assign = None
     for _ in range(max(n_iter, 1)):
-        if kernel == "gemm":
-            assign = _assign_gemm(cb)
-        else:
-            cq = cb.withColumn("mn", V.sq_norm(F.col("mv")))
-            sim = u.crossJoin(F.broadcast(cq)).select(
-                "vid",
-                "uv",
-                "cell_id",
-                V.cosine_from_parts(
-                    V.dot(F.col("uv"), F.col("mv")), F.col("un"), F.col("mn")
-                ).alias("s"),
-            )
-            assign = sim.groupBy("vid").agg(
-                F.min_by(
-                    F.struct("cell_id", "uv"),
-                    F.struct((-F.col("s")).alias("d"), F.col("cell_id")),
-                ).alias("m")
-            ).select(
-                "vid", F.col("m.cell_id").alias("cell_id"), F.col("m.uv").alias("uv")
-            )
-        comp = assign.select("cell_id", F.posexplode("uv").alias("dim", "x"))
+        cq = cb.withColumn("mn", V.sq_norm(F.col("mv")))
+        assign = _nearest_cell(u, cq, "vid", "cell_id", kernel=kernel, carry=("cv",))
+        comp = assign.select("cell_id", F.posexplode("cv").alias("dim", "x"))
         cb = (
             comp.groupBy("cell_id", "dim")
             .agg(
@@ -796,18 +791,8 @@ def pq_adc_rerank_topk(
     q = _with_quantized(queries, vec_col, "qv", "qn").select(
         F.col(query_id_col).alias("query_id"), "qv", "qn"
     )
-    scored = (
-        c.join(F.broadcast(sl), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            V.cosine_from_parts(
-                V.dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")
-            ).alias("score"),
-        )
-    )
-    return _topk_per_query(scored, k)
+    pairs = c.join(F.broadcast(sl), "neighbor_id").join(F.broadcast(q), "query_id")
+    return _topk_per_query(pairs, k)
 
 
 def embedding_near_dup_pairs(
@@ -891,20 +876,68 @@ def embedding_near_dup_pairs(
 _PQ_PACK = 1 << 20
 
 
-def _pq_codebook(cent: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """Quantized PQ codebook (cell_id, cv) with DENSE cell ids: ``row_number
+def _pq_codebook(
+    corpus: DataFrame,
+    centroid_stride: int,
+    id_col: str,
+    vec_col: str,
+    centroids: DataFrame | None,
+) -> DataFrame:
+    """Quantized PQ codebook (cell_id, cv) from the supplied ``centroids``
+    (id_col, vec_col) or, by default, the deterministic corpus sample
+    ``id % centroid_stride == 0``.  Cell ids are DENSE: ``row_number
     over (order by source id) - 1``, i.e. ranks 0..n_cells-1, NOT the raw
     source ids.  Raw ids >= 2^20 would bleed into the distance bits of the
     packed argmin and silently corrupt every code; ranks make the packing
     safe for any corpus id space.  The rank window is unpartitioned but runs
     over the CODEBOOK only, which is small by construction (it is broadcast
     at every use site)."""
+    cent = centroids if centroids is not None else corpus.filter(
+        (F.col(id_col) % centroid_stride) == 0
+    )
     cq = _with_quantized(cent, vec_col, "cv").select(
         F.col(id_col).alias("src_id"), "cv"
     )
     w = Window.orderBy("src_id")
     return cq.select(
         (F.row_number().over(w) - 1).cast("bigint").alias("cell_id"), "cv"
+    )
+
+
+def _subspace_sq_dist(x: str, c: str, j: int, m: int) -> Column:
+    """Exact squared L2 distance between subspace ``j`` (of ``m``) of the
+    quantized vector columns ``x`` and ``c`` — an integer sum, so every
+    PQ distance (encode argmin, ADC lookup table, distortion) is
+    bit-identical in any engine.  Subspace width is ``size(x) div m``."""
+    width = (F.size(F.col(x)) / m).cast("int")
+    start = (F.lit(j) * width) + 1
+    return F.aggregate(
+        F.zip_with(
+            F.slice(F.col(x), start, width),
+            F.slice(F.col(c), start, width),
+            lambda a, b: (a - b) * (a - b),
+        ),
+        F.lit(0).cast("bigint"),
+        lambda acc, d: acc + d,
+    )
+
+
+def _adc_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """ADC ranking shared by :func:`pq_adc_topk` and :func:`ivf_adc_topk`:
+    ``pairs`` = (query_id, neighbor_id, ld) with one lookup-table distance
+    per subspace; sums them to the exact ``adc_dist`` and keeps each
+    query's top-k by ascending distance, neighbor id tie-break ->
+    (query_id, neighbor_id, rank, adc_dist)."""
+    scored = pairs.groupBy("query_id", "neighbor_id").agg(
+        F.sum("ld").cast("bigint").alias("adc_dist")
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "adc_dist")
     )
 
 
@@ -993,28 +1026,19 @@ def pq_codes(
     numpy kernel with identical bits, one small eager codebook collect, and
     ~10-50x the encode throughput (parity pinned in tests).
     """
-    cent = centroids if centroids is not None else corpus.filter(
-        (F.col(id_col) % centroid_stride) == 0
-    )
-    cq = _pq_codebook(cent, id_col, vec_col)
+    _check_kernel(kernel)
+    cq = _pq_codebook(corpus, centroid_stride, id_col, vec_col, centroids)
     c = _with_quantized(corpus, vec_col, "v").select(F.col(id_col), "v")
     if kernel == "gemm":
         return _pq_codes_gemm(c, cq, m, id_col)
-    dim_expr = F.size(F.col("v"))
-    j_cols = []
-    paired = c.join(F.broadcast(cq), how="cross")
-    for j in range(m):
-        sub = F.slice(F.col("v"), (F.lit(j) * (dim_expr / m).cast("int")) + 1,
-                      (dim_expr / m).cast("int"))
-        csub = F.slice(F.col("cv"), (F.lit(j) * (dim_expr / m).cast("int")) + 1,
-                       (dim_expr / m).cast("int"))
-        d = F.aggregate(
-            F.zip_with(sub, csub, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        j_cols.append((d * _PQ_PACK + F.col("cell_id")).alias(f"_p{j}"))
-    packed = paired.select(id_col, *j_cols)
+    packed = c.join(F.broadcast(cq), how="cross").select(
+        id_col,
+        *[
+            (_subspace_sq_dist("v", "cv", j, m) * _PQ_PACK + F.col("cell_id"))
+            .alias(f"_p{j}")
+            for j in range(m)
+        ],
+    )
     return packed.groupBy(id_col).agg(
         *[
             (F.min(f"_p{j}") % _PQ_PACK).cast("bigint").alias(f"code_{j}")
@@ -1062,19 +1086,7 @@ def pq_adc_topk(
     # corpus codes stream map-side through the join instead of shuffling
     # |corpus| x m rows (the initial planner otherwise picks SMJ because
     # the LUT's size is unknown pre-execution)
-    scored = (
-        long_codes.join(F.broadcast(lut), ["j", "cell_id"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("ld").cast("bigint").alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
-    )
+    return _adc_topk(long_codes.join(F.broadcast(lut), ["j", "cell_id"]), k)
 
 
 def _pq_adc_parts(
@@ -1094,10 +1106,7 @@ def _pq_adc_parts(
     codes melted long; ``lut`` = (query_id, cell_id, j, ld) — every
     query's exact subvector-to-codeword L2^2 table, bounded by the query
     batch x m x codebook size, never by the corpus."""
-    cent = centroids if centroids is not None else corpus.filter(
-        (F.col(id_col) % centroid_stride) == 0
-    )
-    cq = _pq_codebook(cent, id_col, vec_col)
+    cq = _pq_codebook(corpus, centroid_stride, id_col, vec_col, centroids)
     codes = pq_codes(corpus, m=m, centroid_stride=centroid_stride,
                      id_col=id_col, vec_col=vec_col, centroids=centroids,
                      kernel=kernel)
@@ -1114,19 +1123,10 @@ def _pq_adc_parts(
     q = _with_quantized(queries, vec_col, "qv").select(
         F.col(query_id_col).alias("query_id"), "qv"
     )
-    dim_expr = F.size(F.col("qv"))
-    lut_rows = []
-    for j in range(m):
-        qsub = F.slice(F.col("qv"), (F.lit(j) * (dim_expr / m).cast("int")) + 1,
-                       (dim_expr / m).cast("int"))
-        csub = F.slice(F.col("cv"), (F.lit(j) * (dim_expr / m).cast("int")) + 1,
-                       (dim_expr / m).cast("int"))
-        d = F.aggregate(
-            F.zip_with(qsub, csub, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        lut_rows.append(F.struct(F.lit(j).alias("j"), d.alias("ld")))
+    lut_rows = [
+        F.struct(F.lit(j).alias("j"), _subspace_sq_dist("qv", "cv", j, m).alias("ld"))
+        for j in range(m)
+    ]
     lut = (
         q.join(F.broadcast(cq), how="cross")
         .select("query_id", "cell_id", F.explode(F.array(*lut_rows)).alias("s"))
@@ -1168,52 +1168,18 @@ def ivf_adc_topk(
     (query, subspace, code) — cost proportional to candidates, not corpus.
     Determinism: both quantizers are deterministic samples, distances are
     exact integers on the quantized lattice — oracle-hashable end-to-end."""
-    cent = corpus.filter((F.col(id_col) % centroid_stride) == 0)
-    cq = _with_quantized(cent, vec_col, "mv", "mn").select(
-        F.col(id_col).alias("ccell"), "mv", "mn"
-    )
+    cq = _coarse_centroids(corpus, centroid_stride, id_col, vec_col, "ccell")
     c = _with_quantized(corpus, vec_col, "cv", "cn", spread_on=id_col).select(
         F.col(id_col).alias("neighbor_id"), "cv", "cn"
     )
-    # kernel="gemm": the corpus-sided coarse assignment is the query's
-    # hottest stage (r14 ledger: 118 s task time at the 5x fixture) — swap
-    # the interpreted fold for the bit-identical Arrow numpy kernel.
-    if kernel == "gemm":
-        assign = _argmax_cell_gemm(c, cq, "neighbor_id", "ccell")
-    else:
-        sim = c.crossJoin(F.broadcast(cq)).select(
-            "neighbor_id",
-            "ccell",
-            V.cosine_from_parts(
-                V.dot(F.col("cv"), F.col("mv")), F.col("cn"), F.col("mn")
-            ).alias("csim"),
-        )
-        assign = sim.groupBy("neighbor_id").agg(
-            F.min_by(
-                F.col("ccell"), F.struct((-F.col("csim")).alias("d"), F.col("ccell"))
-            ).alias("ccell")
-        )
+    # the corpus-sided coarse assignment is the query's hottest stage (r14
+    # ledger: 118 s task time at the 5x fixture) — kernel="gemm" pays off
+    assign = _nearest_cell(c, cq, "neighbor_id", "ccell", kernel=kernel)
     q = _with_quantized(queries, vec_col, "qv", "qn").select(
         F.col(query_id_col).alias("query_id"), "qv", "qn"
     )
-    pw = Window.partitionBy("query_id").orderBy(
-        F.col("psim").desc(), F.col("ccell").asc()
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cq))
-        .select(
-            "query_id",
-            "ccell",
-            V.cosine_from_parts(
-                V.dot(F.col("qv"), F.col("mv")), F.col("qn"), F.col("mn")
-            ).alias("psim"),
-        )
-        .withColumn("_r", F.row_number().over(pw))
-        .filter(F.col("_r") <= nprobe)
-        .select("query_id", "ccell")
-    )
     cand = (
-        assign.join(F.broadcast(probes), "ccell")
+        assign.join(F.broadcast(_probe_cells(q, cq, "ccell", nprobe)), "ccell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
     )
@@ -1221,19 +1187,11 @@ def ivf_adc_topk(
         corpus, queries, m, centroid_stride, id_col, vec_col,
         query_id_col, None, kernel,
     )
-    scored = (
-        cand.join(long_codes, "neighbor_id")
-        .join(F.broadcast(lut), ["query_id", "j", "cell_id"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("ld").cast("bigint").alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_dist")
+    return _adc_topk(
+        cand.join(long_codes, "neighbor_id").join(
+            F.broadcast(lut), ["query_id", "j", "cell_id"]
+        ),
+        k,
     )
 
 
@@ -1252,64 +1210,12 @@ def ivf_cell_assignments(
     generation finds what arbitrary label blocking misses), and any
     per-cluster rollup can group by it.  One broadcast argmin pass, ties
     to the smaller cell id."""
-    cent = corpus.filter((F.col(id_col) % centroid_stride) == 0)
-    cq = _with_quantized(cent, vec_col, "mv", "mn").select(
-        F.col(id_col).alias("cell_id"), "mv", "mn"
-    )
-    return _assign_to_centroids(corpus, cq, id_col, vec_col, kernel=kernel)
-
-
-def _assign_to_centroids(
-    df: DataFrame,
-    cq: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n: int = 1,
-    kernel: str = "expr",
-) -> DataFrame:
-    """(id_col, cell_id): each vector's ``n`` nearest coarse centroids
-    against an EXPLICIT quantized centroid table ``cq`` (cell_id, mv, mn)
-    — the shared stage behind self-assignment
-    (:func:`ivf_cell_assignments`) and cross-table assignment (new-batch
-    ingestion against a corpus-derived quantizer).  One broadcast pass
-    either way; ties to the smaller cell id (the module convention).
-    ``n=1`` stays a pure min_by AGGREGATE (map-side combinable, no
-    window); ``n>1`` ranks with a per-vector window — still partitioned
-    on the vector id, no global exchange."""
-    c = _with_quantized(df, vec_col, "cv", "cn", spread_on=id_col).select(
+    cq = _coarse_centroids(corpus, centroid_stride, id_col, vec_col)
+    c = _with_quantized(corpus, vec_col, "cv", "cn", spread_on=id_col).select(
         F.col(id_col).alias("_nid"), "cv", "cn"
     )
-    if n == 1 and kernel == "gemm":
-        # bit-identical Arrow numpy kernel for the n=1 argmax (the n>1
-        # window path stays expr — its per-vector rank needs every csim)
-        return _argmax_cell_gemm(c, cq, "_nid", "cell_id").select(
-            F.col("_nid").alias(id_col), "cell_id"
-        )
-    sim = c.crossJoin(F.broadcast(cq)).select(
-        "_nid",
-        "cell_id",
-        V.cosine_from_parts(
-            V.dot(F.col("cv"), F.col("mv")), F.col("cn"), F.col("mn")
-        ).alias("csim"),
-    )
-    if n == 1:
-        return (
-            sim.groupBy("_nid")
-            .agg(
-                F.min_by(
-                    F.col("cell_id"),
-                    F.struct((-F.col("csim")).alias("d"), F.col("cell_id")),
-                ).alias("cell_id")
-            )
-            .select(F.col("_nid").alias(id_col), "cell_id")
-        )
-    w = Window.partitionBy("_nid").orderBy(
-        F.col("csim").desc(), F.col("cell_id").asc()
-    )
-    return (
-        sim.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= n)
-        .select(F.col("_nid").alias(id_col), "cell_id")
+    return _nearest_cell(c, cq, "_nid", "cell_id", kernel=kernel).withColumnRenamed(
+        "_nid", id_col
     )
 
 
@@ -1362,37 +1268,35 @@ def semantic_incremental_dedup(
     corruption, so the one tiny fail-fast job is on by default; builders
     wiring a pre-validated centroid flow can opt out."""
     # argument validation BEFORE any Spark action (the validate probe is
-    # an eager job): a bad nprobe must not cost a cluster job, nor be
-    # masked by the centroid error on an empty-centroid corpus
+    # an eager job): a bad nprobe or kernel must not cost a cluster job,
+    # nor be masked by the centroid error on an empty-centroid corpus
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    cent = corpus.filter((F.col(id_col) % centroid_stride) == 0)
-    if validate and cent.isEmpty():
-        raise ValueError(
+    _check_kernel(kernel)
+    cq = _coarse_centroids(
+        corpus, centroid_stride, id_col, vec_col,
+        empty_error=(
             f"semantic_incremental_dedup: corpus has no id divisible by "
             f"centroid_stride={centroid_stride} — zero centroids would "
             f"silently disable deduplication"
-        )
-    cq = _with_quantized(cent, vec_col, "mv", "mn").select(
-        F.col(id_col).alias("cell_id"), "mv", "mn"
+        ) if validate else None,
     )
+
+    def cells(df: DataFrame, n: int) -> DataFrame:
+        c = _with_quantized(df, vec_col, "cv", "cn", spread_on=id_col).select(
+            F.col(id_col).alias("_nid"), "cv", "cn"
+        )
+        return _nearest_cell(c, cq, "_nid", "cell_id", n=n, kernel=kernel)
+
     corp = (
         _with_quantized(corpus, vec_col, "qa", "na", spread_on=id_col)
         .select(F.col(id_col).alias("_cid"), "qa", "na")
-        .join(
-            _assign_to_centroids(corpus, cq, id_col, vec_col, kernel=kernel)
-            .withColumnRenamed(id_col, "_cid"),
-            "_cid",
-        )
+        .join(cells(corpus, 1).withColumnRenamed("_nid", "_cid"), "_cid")
     )
     newq = (
         _with_quantized(new, vec_col, "qb", "nb", spread_on=id_col)
         .select(F.col(id_col).alias("_nid"), "qb", "nb")
-        .join(
-            _assign_to_centroids(new, cq, id_col, vec_col, n=nprobe, kernel=kernel)
-            .withColumnRenamed(id_col, "_nid"),
-            "_nid",
-        )
+        .join(cells(new, nprobe), "_nid")
     )
     score = V.cosine_from_parts(
         V.dot(F.col("qb"), F.col("qa")), F.col("nb"), F.col("na")
@@ -1594,25 +1498,10 @@ def pq_distortion(
     aggregate whose output is m rows total.  At 100 TB this piggybacks on
     the encode job: shuffle bytes are m rows per executor partition.
     """
-    cent = centroids if centroids is not None else corpus.filter(
-        (F.col(id_col) % centroid_stride) == 0
-    )
-    cq = _pq_codebook(cent, id_col, vec_col)
+    cq = _pq_codebook(corpus, centroid_stride, id_col, vec_col, centroids)
     c = _with_quantized(corpus, vec_col, "v", norm_out=None, spread_on=id_col).select(F.col(id_col), "v")
-    dim_expr = F.size(F.col("v"))
     paired = c.join(F.broadcast(cq), how="cross")
-    d_cols = []
-    for j in range(m):
-        sub = F.slice(F.col("v"), (F.lit(j) * (dim_expr / m).cast("int")) + 1,
-                      (dim_expr / m).cast("int"))
-        csub = F.slice(F.col("cv"), (F.lit(j) * (dim_expr / m).cast("int")) + 1,
-                       (dim_expr / m).cast("int"))
-        d = F.aggregate(
-            F.zip_with(sub, csub, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        d_cols.append(d.alias(f"_d{j}"))
+    d_cols = [_subspace_sq_dist("v", "cv", j, m).alias(f"_d{j}") for j in range(m)]
     mins = paired.select(id_col, *d_cols).groupBy(id_col).agg(
         *[F.min(f"_d{j}").cast("bigint").alias(f"_m{j}") for j in range(m)]
     )

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import re
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -109,6 +110,24 @@ def _scan_side_plan(df: DataFrame) -> bool:
     return _EXCHANGE_NODES.search(plan) is None
 
 
+def _reads_bucketed_table(df: DataFrame) -> bool:
+    """True when a leaf of ``df``'s plan is a bucketed file-source table.
+    Its bucket layout already clusters rows on the bucket keys, and Spark
+    keeps the scan bucketed only while no exchange sits between it and the
+    operators the bucketing serves — a repartition above it switches the
+    bucketed scan off and brings back every shuffle the layout removed.
+    The ``.rdd`` probe cannot see this: planned bare, with no consumer of
+    its bucketing, the scan reports its file-split count instead."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        try:
+            if leaves.apply(i).relation().bucketSpec().isDefined():
+                return True
+        except Py4JError:  # not a file-source relation: no bucket layout
+            continue
+    return False
+
+
 def ensure_compute_width(df: DataFrame, *key_cols: str) -> DataFrame:
     """:func:`spread`, but ONLY when ``df``'s physical parallelism is below
     the session width (single-row-group local files; a coalesced upstream).
@@ -120,13 +139,15 @@ def ensure_compute_width(df: DataFrame, *key_cols: str) -> DataFrame:
     adaptive plan and eagerly execute its shuffle stages (recomputed at
     action time — ADVICE r13), and such a plan's exchange already starts
     at the session width pre-AQE, so the helper passes it through.  Also a
-    pass-through on streams (no static partition count to probe) and on
-    sessions without a probe surface (Spark Connect)."""
+    pass-through on streams (no static partition count to probe), on
+    bucketed tables (the exchange would undo the bucket layout — see
+    :func:`_reads_bucketed_table`) and on sessions without a probe surface
+    (Spark Connect)."""
     if df.isStreaming:
         # no static partition count to probe (.rdd is illegal on a stream);
         # micro-batch parallelism is the source's / state shuffle's concern
         return df
-    if not _scan_side_plan(df):
+    if not _scan_side_plan(df) or _reads_bucketed_table(df):
         return df
     n = compute_width(df)
     try:

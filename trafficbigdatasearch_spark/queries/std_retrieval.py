@@ -980,8 +980,8 @@ def sim_ivf_adc_topk_q(spark, sf):
     fidelity — the two independent recall knobs of a deployed ANN tier."""
     emb = load_table(spark, sf, "embeddings")
     # kernel="gemm": the coarse assignment + PQ encode legs run through the
-    # bit-identical Arrow numpy kernels (similarity._argmax_cell_gemm /
-    # _pq_codes_gemm) — r14 interleaved A/B 4.03 -> 2.66 s at sf0.1 and
+    # bit-identical Arrow numpy kernels (the GEMM branch of
+    # similarity._nearest_cell, and similarity._pq_codes_gemm) — r14 interleaved A/B 4.03 -> 2.66 s at sf0.1 and
     # 7.37 -> 2.86 s at the 5x fixture; parity pinned in tests and by this
     # row's oracle hash
     return similarity.ivf_adc_topk(
