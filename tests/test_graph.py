@@ -1,14 +1,21 @@
-"""Connected-components (operators/graph.py) vs a reference union-find.
+"""Unit semantics for operators/graph.py, checked against brute-force or
+hand-computed references.
 
-Shapes chosen to stress the large-star/small-star rounds: a long chain
-(diameter >> log n — naive propagation's worst case), a hub star, dense
-cliques, multiple components, isolated nodes, and randomized graphs."""
+Connected components run against a reference union-find on shapes that
+stress the large-star/small-star rounds: a long chain (diameter >> log n —
+naive propagation's worst case), a hub star, dense cliques, multiple
+components, isolated nodes, and randomized graphs.  The other operators —
+BFS, PageRank/PPR, link prediction, incremental CC, triangles, local
+clustering, k-core, label propagation, SSSP, modularity, assortativity,
+component sizes — and the amortized argmax bounds guard get hand cases and
+seeded random graphs."""
 
 from __future__ import annotations
 
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from trafficbigdatasearch_spark.operators import graph
 
@@ -504,3 +511,248 @@ def test_component_size_stats_hand_case(spark):
     assert all(r["n_clustered"] == 6 for r in rows.values())
     assert rows[1]["share_ppm"] == 500000
     assert rows[9]["share_ppm"] == 166666  # integer div, floor
+
+
+def test_triangles_single(spark):
+    e = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4)], "u: bigint, v: bigint"
+    )
+    got = {r["id"]: r["n_triangles"] for r in graph.triangle_counts(e).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 0}
+
+
+def test_triangles_duplicate_and_reversed_edges_ignored(spark):
+    # duplicates / reversed orientations must not inflate counts
+    e = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (3, 2), (1, 3), (1, 3)], "u: bigint, v: bigint"
+    )
+    got = {r["id"]: r["n_triangles"] for r in graph.triangle_counts(e).collect()}
+    assert got == {1: 1, 2: 1, 3: 1}
+
+
+def test_triangles_k4(spark):
+    # complete graph on 4 nodes: C(3,2)=3 triangles per node, 4 total
+    edges = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    e = spark.createDataFrame(edges, "u: bigint, v: bigint")
+    got = {r["id"]: r["n_triangles"] for r in graph.triangle_counts(e).collect()}
+    assert got == {1: 3, 2: 3, 3: 3, 4: 3}
+
+
+def test_triangles_hub_star_has_none(spark):
+    # star graph: hub with high degree, zero triangles — exercises the
+    # degree-orientation path that bounds hub out-degree
+    e = spark.createDataFrame(
+        [(0, i) for i in range(1, 9)], "u: bigint, v: bigint"
+    )
+    out = graph.triangle_counts(e)
+    assert out.filter(F.col("n_triangles") > 0).count() == 0
+
+
+def test_kcore_peels_tendril_keeps_clique(spark):
+    # K4 clique (3-core) with a pendant chain: the chain must peel away
+    # within 3 rounds, the clique must survive
+    edges = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    edges += [(4, 5), (5, 6), (6, 7)]
+    e = spark.createDataFrame(edges, "u: bigint, v: bigint")
+    got = {r["id"]: r["in_kcore"]
+           for r in graph.kcore_membership(e, k=3, n_rounds=3).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 0, 6: 0, 7: 0}
+
+
+def test_kcore_bounded_rounds_overapproximates(spark):
+    # a 6-chain with k=2: membership = the degree test AFTER the n-th
+    # edge deletion (n COMPLETE peels — the final degree pass re-checks
+    # drops caused by the last deletion).  1 complete peel removes the
+    # ends {1,6} and their edges, leaving degrees 2:1 3:2 4:2 5:1 ->
+    # in_kcore {3,4}; the second peel's deletion leaves only edge 3-4,
+    # so 2 rounds already empties it (true 2-core of a chain is empty).
+    e = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)], "u: bigint, v: bigint"
+    )
+    one = graph.kcore_membership(e, k=2, n_rounds=1)
+    assert one.filter(F.col("in_kcore") == 1).count() == 2  # nodes 3,4
+    two = graph.kcore_membership(e, k=2, n_rounds=2)
+    assert two.filter(F.col("in_kcore") == 1).count() == 0
+    three = graph.kcore_membership(e, k=2, n_rounds=3)
+    assert three.filter(F.col("in_kcore") == 1).count() == 0
+
+
+def test_kcore_rejects_bad_params(spark):
+    import pytest as _pytest
+    e = spark.createDataFrame([(1, 2)], "u: bigint, v: bigint")
+    with _pytest.raises(ValueError, match="k and n_rounds"):
+        graph.kcore_membership(e, k=0, n_rounds=1)
+
+
+def test_lpa_splits_two_cliques_bridge(spark):
+    # two triangles joined by one bridge edge: each triangle converges to
+    # its min label; the bridge is outvoted (2 triangle votes vs 1)
+    e = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (4, 5), (5, 6), (4, 6), (3, 4)],
+        "u: bigint, v: bigint",
+    )
+    got = {r["id"]: r["community"]
+           for r in graph.label_propagation(e, n_rounds=4).collect()}
+    assert got[1] == got[2] == got[3]
+    assert got[4] == got[5] == got[6]
+    assert got[1] != got[4]
+
+
+def test_lpa_isolated_keeps_own_label(spark):
+    e = spark.createDataFrame([(1, 2)], "u: bigint, v: bigint")
+    nodes = spark.createDataFrame([(1,), (2,), (9,)], "id: bigint")
+    got = {r["id"]: r["community"]
+           for r in graph.label_propagation(e, n_rounds=2, nodes=nodes).collect()}
+    assert got[9] == 9 and got[1] == 1 and got[2] == 1
+
+
+def test_lpa_deterministic_across_runs(spark):
+    edges = [(i, (i * 7 + 3) % 50) for i in range(50)] + [
+        (i, (i + 1) % 50) for i in range(50)
+    ]
+    e = spark.createDataFrame(edges, "u: bigint, v: bigint").repartition(7)
+    a = sorted(map(tuple, graph.label_propagation(e, n_rounds=3).collect()))
+    b = sorted(map(tuple, graph.label_propagation(e.repartition(3), n_rounds=3).collect()))
+    assert a == b
+
+
+def _seeded_graph(n=60, m=150, seed=7):
+    # deterministic pseudo-random edge set (LCG — no RNG state dependence)
+    edges, x = [], seed
+    while len(edges) < m:
+        x = (x * 48271) % 2147483647
+        u = x % n
+        x = (x * 48271) % 2147483647
+        v = x % n
+        if u != v:
+            edges.append((u, v))
+    return edges
+
+
+def test_triangles_match_bruteforce_on_random_graph(spark):
+    edges = _seeded_graph()
+    undirected = {frozenset(e) for e in edges}
+    adj = {}
+    for e in undirected:
+        a, b = sorted(e)
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    expected = {
+        n: sum(
+            1
+            for x in adj[n]
+            for y in adj[n]
+            if x < y and y in adj.get(x, ())
+        )
+        for n in adj
+    }
+    e = spark.createDataFrame(edges, "u: bigint, v: bigint")
+    got = {r["id"]: r["n_triangles"] for r in graph.triangle_counts(e).collect()}
+    assert got == expected
+
+
+def test_kcore_matches_bruteforce_peel_on_random_graph(spark):
+    edges = _seeded_graph(n=50, m=90, seed=11)
+    undirected = {tuple(sorted(e)) for e in edges}
+    k = 3
+    cur = set(undirected)
+    for _ in range(10):
+        deg = {}
+        for a, b in cur:
+            deg[a] = deg.get(a, 0) + 1
+            deg[b] = deg.get(b, 0) + 1
+        surv = {n for n, d in deg.items() if d >= k}
+        cur = {(a, b) for a, b in cur if a in surv and b in surv}
+    nodes = {n for e in undirected for n in e}
+    e = spark.createDataFrame(list(undirected), "u: bigint, v: bigint")
+    got = {r["id"]: r["in_kcore"]
+           for r in graph.kcore_membership(e, k=k, n_rounds=10).collect()}
+    assert got == {n: int(n in surv) for n in nodes}
+
+
+def test_sssp_matches_bruteforce_dijkstra(spark):
+    import heapq
+
+    edges = []
+    x = 13
+    for _ in range(120):
+        x = (x * 48271) % 2147483647
+        u = x % 40
+        x = (x * 48271) % 2147483647
+        v = x % 40
+        if u != v:
+            edges.append((u, v, (u + v) % 7 + 1))
+    adj = {}
+    for u, v, w in edges:
+        adj.setdefault(u, []).append((v, w))
+    dist = {0: 0}
+    pq = [(0, 0)]
+    while pq:
+        d, n = heapq.heappop(pq)
+        if d > dist.get(n, float("inf")):
+            continue
+        for v, w in adj.get(n, []):
+            nd = d + w
+            if nd < dist.get(v, float("inf")):
+                dist[v] = nd
+                heapq.heappush(pq, (nd, v))
+    e = spark.createDataFrame(edges, "u: bigint, v: bigint, w: bigint")
+    seeds = spark.createDataFrame([(0,)], "id: bigint")
+    # 40 rounds >= any shortest path's hop count on 40 nodes -> exact
+    got = {r["id"]: r["dist"]
+           for r in graph.sssp_bounded(e, seeds, n_rounds=40).collect()}
+    assert got == dist
+
+
+def test_sssp_bounded_rounds_upper_bound(spark):
+    # chain 0-1-2-3 with weight 1: after 2 rounds node 3 is unreached
+    e = spark.createDataFrame(
+        [(0, 1, 1), (1, 2, 1), (2, 3, 1)], "u: bigint, v: bigint, w: bigint"
+    )
+    seeds = spark.createDataFrame([(0,)], "id: bigint")
+    two = {r["id"]: r["dist"] for r in graph.sssp_bounded(e, seeds, 2).collect()}
+    assert two == {0: 0, 1: 1, 2: 2}
+    three = {r["id"]: r["dist"] for r in graph.sssp_bounded(e, seeds, 3).collect()}
+    assert three == {0: 0, 1: 1, 2: 2, 3: 3}
+
+
+def test_argmax_amortized_guard_raises(spark):
+    """graph.quality_argmax_key's bounds survive the amortization: an
+    out-of-range minor raises through the group-level guard."""
+    import pytest as _pytest
+
+    df = spark.createDataFrame(
+        [(1, 100, 1), (1, 200, 1 << 31)], "c bigint, q bigint, id bigint"
+    )
+    bad = (
+        df.groupBy("c")
+        .agg(
+            F.max_by("id", graph.quality_argmax_key(F.col("q"), F.col("id"))).alias("_k"),
+            graph.quality_argmax_bounds_ok(F.col("q"), F.col("id")).alias("_ok"),
+        )
+        .select(graph.quality_argmax_guard(F.col("_ok"), F.col("_k")).alias("keep"))
+    )
+    with _pytest.raises(Exception, match="argmax key out of range"):
+        bad.collect()
+
+
+def test_lpa_rejects_labels_outside_pack_bound(spark):
+    """Labels must fit the composite argmax key's 2^31 packing.  On this
+    graph the unchecked key elected label 0 for node 2147483654, where the
+    rule (count dominates, then the smaller label) gives 2147483649; an
+    out-of-range label must raise instead."""
+    e = spark.createDataFrame(
+        [
+            (2147483656, 2147483649),
+            (2147483653, 2147483649),
+            (2147483649, 2147483654),
+            (2147483653, 0),
+            (2147483654, 2147483656),
+            (0, 2147483649),
+            (2147483653, 0),
+            (2147483653, 2147483656),
+        ],
+        "u: bigint, v: bigint",
+    )
+    with pytest.raises(Exception, match="argmax key out of range"):
+        graph.label_propagation(e, n_rounds=2).collect()

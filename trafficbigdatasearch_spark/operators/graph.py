@@ -1,27 +1,29 @@
-"""Distributed connected components over candidate-duplicate pair sets.
+"""Graph operators over undirected (or, for SSSP/PageRank, directed) edge
+lists ``(u, v[, w])``, all built from native Spark plans — nothing collects
+a neighborhood, a component or an adjacency list to one executor or the
+driver.
 
-The reference has no graph surface; this is the beyond-parity operator that
-turns near-dup PAIRS (minhash LSH / simhash / jaccard — operators/dedup.py)
-into duplicate CLUSTERS, the step every web-scale dedup pipeline needs
-between "these two look alike" and "keep one representative per group".
+- Components: :func:`connected_components` (alternating large/small star,
+  Kiveris et al. SoCC'14), :func:`incremental_components`,
+  :func:`dedup_clusters`, :func:`component_size_stats`.
+- Traversal: :func:`bfs_levels`, :func:`sssp_bounded` (fixed rounds).
+- Ranking: :func:`pagerank_integer`, :func:`personalized_pagerank_integer`
+  (integer-exact power iteration, one shared loop).
+- Cohesion and communities: :func:`triangle_counts`,
+  :func:`local_clustering` (one triangle engine), :func:`kcore_membership`,
+  :func:`label_propagation`.
+- Link prediction and graph statistics: :func:`jaccard_link_prediction`,
+  :func:`modularity_by_community`, :func:`degree_assortativity`.
+- Keep-best survivor keys: :func:`quality_argmax_key` with its amortized
+  bounds check (:func:`quality_argmax_bounds_ok`, :func:`quality_argmax_guard`).
 
-Algorithm: alternating large-star / small-star (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14) — the shuffle-native
-formulation.  Each half-round is one symmetrize + ONE per-node min window
-over the node-id hash partitioning (r14: the window replaces the original
-aggregate + join pair, halving the exchanges per star); no step ever
-materializes a whole component on one executor (posting lists, adjacency
-collects and driver-side union-find are all avoided).  Converges in O(log² n) rounds
-independent of graph diameter — naive min-label propagation needs
-O(diameter) rounds, which on the pathological chain graph is O(n).
-
-At 100 TB: each round is a bounded number of hash shuffles over the edge
-set; edges only ever REWIRE toward smaller ids (the per-round edge count is
-monotonically non-increasing after the first large-star), so the working set
-shrinks as stars form.  The driver-side loop with a per-round
-``localCheckpoint`` (lineage truncation — iterative plans otherwise grow
-exponentially) and a convergence count is inherent to any fixpoint
-computation; every per-round job is fully distributed.
+Shared preludes, one home each: :func:`_edges` (the bigint edge
+projection), :func:`_canonical` (the deduped undirected edge set),
+:func:`_endpoints`/:func:`_node_set` (endpoint stacks and the "``nodes`` or
+the edge endpoints" node set), :func:`_degrees` and :func:`_triangles` (the
+degree-oriented wedge join).  Iterative operators truncate lineage with one
+lazy ``localCheckpoint`` per round; only connected components runs a
+convergence check, the others run a fixed round count.
 """
 
 from __future__ import annotations
@@ -40,6 +42,9 @@ _ARGMAX_PACK = 1 << 31
 #: Convergence-check bound of the CC fixpoint loops — generous: 2^25 nodes
 #: converge well inside 25 contraction rounds.
 _CC_MAX_ROUNDS = 25
+
+#: PageRank damping as the exact rational 17/20 = 0.85.
+_DAMPING_NUM, _DAMPING_DEN = 17, 20
 
 
 def quality_argmax_key(major, minor):
@@ -94,6 +99,104 @@ def quality_argmax_guard(ok_col, out_col):
 
 def _symmetrize(e: DataFrame) -> DataFrame:
     return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+
+def _edges(edges: DataFrame, *extra: str) -> DataFrame:
+    """The bigint edge projection every edge-list operator starts from:
+    ``(u, v)`` plus any ``extra`` columns (SSSP's weight ``w``)."""
+    return edges.select(
+        *(F.col(c).cast("bigint").alias(c) for c in ("u", "v", *extra))
+    )
+
+
+def _canonical(edges: DataFrame) -> DataFrame:
+    """The canonical undirected edge set: self-loops dropped, each edge once
+    as ``(least, greatest)``.  Every caller reads it from several legs
+    (degrees, orientation/label joins, anti joins), so the deduped set is
+    checkpointed once, lazily."""
+    e = _edges(edges).filter(F.col("u") != F.col("v"))
+    return (
+        e.select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _endpoints(e: DataFrame, name: str) -> DataFrame:
+    """Both endpoint columns of ``e`` stacked into one column ``name`` — one
+    row per edge end, so grouping it counts degrees."""
+    return e.select(F.col("u").alias(name)).union(e.select(F.col("v").alias(name)))
+
+
+def _ids(df: DataFrame) -> DataFrame:
+    """The distinct bigint ``id`` column of a node or seed table."""
+    return df.select(F.col("id").cast("bigint").alias("id")).distinct()
+
+
+def _node_set(nodes: DataFrame | None, ends: DataFrame) -> DataFrame:
+    """The node set an operator reports on: ``nodes`` when given, else the
+    distinct ``id`` rows of ``ends`` — the caller's own edge-derived id
+    column, so e.g. PageRank keeps self-loop nodes and triangle counting
+    does not."""
+    return _ids(nodes) if nodes is not None else ends.distinct()
+
+
+def _degrees(canon: DataFrame) -> DataFrame:
+    """(n, d): the degree of every node of a canonical edge set."""
+    return (
+        _endpoints(canon, "n")
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    )
+
+
+def _triangles(canon: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The degree-ordered wedge-join triangle engine (the standard MapReduce
+    formulation, e.g. Suri & Vassilvitskii, WWW'11 "Counting Triangles and
+    the Curse of the Last Reducer") over a canonical edge set.  Returns
+    ``(deg, counts)``: the (n, d) degrees and (id, n_triangles) for every
+    node in at least one triangle.
+
+    Orient every edge from the (degree, id)-SMALLER endpoint to the larger;
+    every triangle then has exactly ONE node with two outgoing oriented
+    edges, so wedges (u -> v1, u -> v2) joined back against the oriented
+    edge set (v1 -> v2) enumerate each triangle exactly once.  The
+    orientation bounds per-node out-degree by O(sqrt(|E|)) on any graph, so
+    the wedge self-join never explodes on high-degree hubs — THE skew trap
+    of the naive formulation, where one celebrity node with degree d
+    contributes d² wedges.
+
+    Cost: one degree aggregate + one broadcast-free hash self-join on the
+    wedge apex + one hash semi-join of wedges against edges + one
+    per-corner count aggregate.  Everything is partitioned on node/edge
+    keys; nothing is collected."""
+    deg = _degrees(canon)
+    # orient by (deg, id): rank = deg * 2^31 + id gives one bigint total
+    # order (ids < 2^31 here; the 100 TB variant pairs the columns); the
+    # joins run over the E-row canonical set, not the 2E symmetrized one
+    rank = deg.select("n", (F.col("d") * F.lit(1 << 31) + F.col("n")).alias("rnk"))
+    ranked = (
+        canon.join(rank.select(F.col("n").alias("u"), F.col("rnk").alias("ru")), "u")
+        .join(rank.select(F.col("n").alias("v"), F.col("rnk").alias("rv")), "v")
+    )
+    up = F.col("ru") < F.col("rv")
+    oriented = ranked.select(
+        F.when(up, F.col("u")).otherwise(F.col("v")).alias("u"),
+        F.when(up, F.col("v")).otherwise(F.col("u")).alias("v"),
+    )
+    o1 = oriented.select(F.col("u").alias("w"), F.col("v").alias("a"))
+    o2 = oriented.select(F.col("u").alias("w"), F.col("v").alias("b"))
+    wedges = o1.join(o2, "w").filter(F.col("a") < F.col("b"))
+    closing = oriented.select(
+        F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
+    )
+    triangles = wedges.join(closing, ["a", "b"])
+    corners = (
+        triangles.select(F.col("w").alias("id"))
+        .union(triangles.select(F.col("a").alias("id")))
+        .union(triangles.select(F.col("b").alias("id")))
+    )
+    return deg, corners.groupBy("id").agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -156,7 +259,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     nodes: DataFrame | None = None,
-    id_col: str = "id",
     cast: str | None = "bigint",
 ) -> DataFrame:
     """Resolve an undirected pair set into components.
@@ -175,6 +277,17 @@ def connected_components(
     The result is MATERIALIZED (the fixpoint loop must run jobs to detect
     convergence); the returned DataFrame reads the final checkpointed edge
     set, so downstream consumers pay no recomputation.
+
+    Algorithm: alternating large-star / small-star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14).  Each
+    half-round is one symmetrize + ONE per-node min window over the node-id
+    hash partitioning; no step materializes a whole component on one
+    executor.  Converges in O(log² n) rounds independent of graph diameter
+    (naive min-label propagation needs O(diameter), O(n) on a chain).  Edges
+    only ever REWIRE toward smaller ids, so the per-round edge count is
+    non-increasing after the first large-star and the working set shrinks
+    as stars form; each round's ``localCheckpoint`` truncates the otherwise
+    exponentially growing lineage.
 
     Raises ``RuntimeError`` if the edge set has not stabilized after
     ``_CC_MAX_ROUNDS`` convergence checks — a loud failure beats silently
@@ -216,22 +329,20 @@ def connected_components(
             f"connected_components did not converge in {_CC_MAX_ROUNDS} rounds"
         )
     # fixpoint edge set is a star forest: (member, root) edges only
-    members = e.select(F.col("u").alias(id_col), F.col("v").alias("component"))
+    members = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
     roots = (
-        e.select(F.col("v").alias(id_col))
+        e.select(F.col("v").alias("id"))
         .distinct()
-        .select(id_col, F.col(id_col).alias("component"))
+        .select("id", F.col("id").alias("component"))
     )
-    labels = members.union(roots).groupBy(id_col).agg(
+    labels = members.union(roots).groupBy("id").agg(
         F.min("component").alias("component")
     )
     if nodes is not None:
-        base = nodes.select(
-            (F.col(id_col).cast(cast) if cast else F.col(id_col)).alias(id_col)
-        ).distinct()
-        labels = base.join(labels, id_col, "left").select(
-            id_col,
-            F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
+        base = nodes.select(_id("id").alias("id")).distinct()
+        labels = base.join(labels, "id", "left").select(
+            "id",
+            F.coalesce(F.col("component"), F.col("id")).alias("component"),
         )
     return labels
 
@@ -239,11 +350,6 @@ def connected_components(
 def incremental_components(
     components: DataFrame,
     new_edges: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    id_col: str = "id",
-    comp_col: str = "component",
-    cast: str | None = "bigint",
 ) -> DataFrame:
     """MAINTAIN an existing :func:`connected_components` labeling under a
     batch of NEW edges without touching the labeled corpus — the
@@ -269,14 +375,16 @@ def incremental_components(
     smaller.  New nodes (endpoints absent from ``components``) label
     themselves before merging, exactly like CC's ``nodes`` fallback.
 
-    Returns the updated (id, component) labeling covering every
-    previously-labeled id plus every new-edge endpoint."""
-    _id = (lambda c: F.col(c).cast(cast)) if cast else F.col
+    Inputs are an (id, component) labeling and (id_a, id_b) new edges, both
+    compared as bigints.  Returns the updated (id, component) labeling
+    covering every previously-labeled id plus every new-edge endpoint."""
     comp = components.select(
-        _id(id_col).alias(id_col), _id(comp_col).alias(comp_col)
+        F.col("id").cast("bigint").alias("id"),
+        F.col("component").cast("bigint").alias("component"),
     )
     edges = new_edges.select(
-        _id(id_a).alias("_ea"), _id(id_b).alias("_eb")
+        F.col("id_a").cast("bigint").alias("_ea"),
+        F.col("id_b").cast("bigint").alias("_eb"),
     ).filter(F.col("_ea") != F.col("_eb"))
     # endpoint -> current label.  Scale shape (the documented contract):
     # the corpus-sized table is only ever the STREAM side of a broadcast
@@ -287,41 +395,38 @@ def incremental_components(
     # The labeled endpoints are batch-sized; lazily checkpointed because
     # they feed both label-graph legs and the known/new split.
     endpoints = (
-        edges.select(F.col("_ea").alias(id_col))
-        .union(edges.select(F.col("_eb").alias(id_col)))
+        edges.select(F.col("_ea").alias("id"))
+        .union(edges.select(F.col("_eb").alias("id")))
         .distinct()
     )
     ep_known = (
-        comp.join(F.broadcast(endpoints), id_col)
-        .select(id_col, F.col(comp_col).alias("_lab"))
+        comp.join(F.broadcast(endpoints), "id")
+        .select("id", F.col("component").alias("_lab"))
         .localCheckpoint(eager=False)
     )
     # previously-unlabeled endpoints label themselves (CC's nodes
     # fallback); both sides of this anti join are batch-sized
     ep_new = (
-        endpoints.join(ep_known.select(id_col), id_col, "left_anti")
-        .select(id_col, F.col(id_col).alias("_lab"))
+        endpoints.join(ep_known.select("id"), "id", "left_anti")
+        .select("id", F.col("id").alias("_lab"))
         .localCheckpoint(eager=False)
     )
     ep_labels = ep_known.unionByName(ep_new)
-    la = ep_labels.withColumnRenamed(id_col, "_ea").withColumnRenamed(
+    la = ep_labels.withColumnRenamed("id", "_ea").withColumnRenamed(
         "_lab", "_la"
     )
-    lb = ep_labels.withColumnRenamed(id_col, "_eb").withColumnRenamed(
+    lb = ep_labels.withColumnRenamed("id", "_eb").withColumnRenamed(
         "_lab", "_lb"
     )
     label_edges = (
         edges.join(F.broadcast(la), "_ea")
         .join(F.broadcast(lb), "_eb")
-        .select(F.col("_la").alias(id_a), F.col("_lb").alias(id_b))
-        .filter(F.col(id_a) != F.col(id_b))
+        .select(F.col("_la").alias("id_a"), F.col("_lb").alias("id_b"))
+        .filter(F.col("id_a") != F.col("id_b"))
         .distinct()
     )
     merged = connected_components(
-        label_edges,
-        id_a=id_a,
-        id_b=id_b,
-        cast=None,  # ids already cast above
+        label_edges, cast=None  # ids already cast above
     ).select(F.col("id").alias("_old_lab"), F.col("component").alias("_root"))
     # relabel: ALL old rows through the (tiny, broadcast) label->root map
     # — this covers every previously-labeled node including known
@@ -330,16 +435,16 @@ def incremental_components(
     # needs no distinct: the corpus is never shuffled, only scanned
     # (second and final scan).
     relabeled_old = comp.join(
-        F.broadcast(merged), comp[comp_col] == F.col("_old_lab"), "left"
+        F.broadcast(merged), comp["component"] == F.col("_old_lab"), "left"
     ).select(
-        id_col,
-        F.coalesce(F.col("_root"), F.col(comp_col)).alias(comp_col),
+        "id",
+        F.coalesce(F.col("_root"), F.col("component")).alias("component"),
     )
     relabeled_new = ep_new.join(
         F.broadcast(merged), F.col("_lab") == F.col("_old_lab"), "left"
     ).select(
-        id_col,
-        F.coalesce(F.col("_root"), F.col("_lab")).alias(comp_col),
+        "id",
+        F.coalesce(F.col("_root"), F.col("_lab")).alias("component"),
     )
     return relabeled_old.unionByName(relabeled_new)
 
@@ -348,9 +453,6 @@ def bfs_levels(
     edges: DataFrame,
     seeds: DataFrame,
     max_depth: int,
-    u_col: str = "u",
-    v_col: str = "v",
-    id_col: str = "id",
 ) -> DataFrame:
     """Breadth-first level propagation from a seed set over an undirected
     edge list: (id, level) for every node whose shortest hop-distance to
@@ -371,21 +473,12 @@ def bfs_levels(
     the frontier is the working set: rounds touch only edges incident to
     the frontier, not the whole graph.
     """
-    sym = edges.select(
-        F.col(u_col).cast("bigint").alias("u"), F.col(v_col).cast("bigint").alias("v")
-    )
-    sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v"))).filter(
-        F.col("u") != F.col("v")
-    )
+    sym = _symmetrize(_edges(edges)).filter(F.col("u") != F.col("v"))
     # the edge list is referenced by every round's join: checkpoint it once
     # (lazily — materialized by the first round's execution, reused from
     # block storage by the rest) instead of re-deriving it per round
     sym = sym.localCheckpoint(eager=False)
-    visited = (
-        seeds.select(F.col(id_col).cast("bigint").alias("id"))
-        .distinct()
-        .withColumn("level", F.lit(0))
-    )
+    visited = _ids(seeds).withColumn("level", F.lit(0))
     frontier = visited.select("id")
     for depth in range(1, max_depth + 1):
         neighbors = (
@@ -404,27 +497,22 @@ def bfs_levels(
 def pagerank_integer(
     edges: DataFrame,
     n_iter: int = 3,
-    damping_num: int = 17,
-    damping_den: int = 20,
     scale: int = 10**12,
-    u_col: str = "u",
-    v_col: str = "v",
     nodes: DataFrame | None = None,
-    id_col: str = "id",
 ) -> DataFrame:
     """Fixed-iteration PageRank with INTEGER-EXACT arithmetic: ranks are
-    scaled bigints, damping is the rational ``damping_num/damping_den``
-    (default 17/20 = 0.85), and every step is integer multiply / integer
-    floor-division — so the result is bit-identical in any engine (the
-    float formulation would accumulate engine-specific rounding), and
-    deterministic under any partitioning or retry.
+    scaled bigints, damping is the rational ``dnum/dden`` = 17/20 = 0.85
+    (``_DAMPING_NUM``/``_DAMPING_DEN``), and every step is integer
+    multiply / integer floor-division — so the result is bit-identical in
+    any engine (the float formulation would accumulate engine-specific
+    rounding), and deterministic under any partitioning or retry.
 
     Per iteration (one hash join + one map-side-combined aggregate, the
     textbook distributed PageRank shape):
 
         contrib(u->v) = r(u) div outdeg(u)
-        r'(v) = base + (damping_num * Σ contrib) div damping_den
-        base  = ((damping_den - damping_num) * scale) div (damping_den * n)
+        r'(v) = base + (dnum * Σ contrib) div dden
+        base  = ((dden - dnum) * scale) div (dden * n)
 
     Truncation drains a few units of mass per round (bounded by n per
     iteration out of ``scale`` — vanishing for scale=1e12); rank ORDER and
@@ -434,27 +522,23 @@ def pagerank_integer(
     edge endpoints.  Fixed ``n_iter`` -> no convergence sync; lineage is
     truncated per round with a lazy localCheckpoint.
     """
-    e = edges.select(
-        F.col(u_col).cast("bigint").alias("u"), F.col(v_col).cast("bigint").alias("v")
-    )
-    if nodes is None:
-        node_df = e.select(F.col("u").alias("id")).union(
-            e.select(F.col("v").alias("id"))
-        ).distinct()
-    else:
-        node_df = nodes.select(F.col(id_col).cast("bigint").alias("id")).distinct()
-    node_df = node_df.localCheckpoint(eager=False)
+    e = _edges(edges)
+    node_df = _node_set(nodes, _endpoints(e, "id")).localCheckpoint(eager=False)
     n = node_df.count()
+    ew = _out_edges(e, node_df)
+
+    base = ((_DAMPING_DEN - _DAMPING_NUM) * scale) // (_DAMPING_DEN * n)
+    r = node_df.withColumn("rank", F.lit(scale // n).cast("bigint"))
+    return _pagerank_rounds(ew, node_df, r, F.lit(base), n_iter)
+
+
+def _out_edges(e: DataFrame, node_df: DataFrame) -> DataFrame:
+    """(u, v, _d): the PageRank edges with their source's out-degree —
+    raises ``ValueError`` when an edge source lies outside ``node_df``."""
     if e.join(node_df, e["u"] == node_df["id"], "left_anti").limit(1).count():
         raise ValueError("edge source outside the node set")
     deg = e.groupBy("u").agg(F.count("*").alias("_d"))
-    ew = e.join(deg, "u").localCheckpoint(eager=False)
-
-    base = ((damping_den - damping_num) * scale) // (damping_den * n)
-    r = node_df.withColumn("rank", F.lit(scale // n).cast("bigint"))
-    return _pagerank_rounds(
-        ew, node_df, r, F.lit(base), n_iter, damping_num, damping_den
-    )
+    return e.join(deg, "u").localCheckpoint(eager=False)
 
 
 def _pagerank_rounds(
@@ -463,15 +547,13 @@ def _pagerank_rounds(
     r: DataFrame,
     base: Column,
     n_iter: int,
-    damping_num: int,
-    damping_den: int,
 ) -> DataFrame:
     """The integer power iteration shared by :func:`pagerank_integer` and
     :func:`personalized_pagerank_integer`.  Per round, one hash join of the
     out-edges ``ew`` (u, v, _d) against the ranks ``r`` (id, rank) and one
     map-side-combined aggregate give each node's summed contribution; then
 
-        r'(id) = base + (damping_num * Σ contrib) div damping_den
+        r'(id) = base + (dnum * Σ contrib) div dden
 
     where ``base`` is a column over ``node_df`` (a constant for global
     PageRank, the seed-only teleport for the personalized variant).  Each
@@ -490,7 +572,7 @@ def _pagerank_rounds(
                 (
                     base
                     + F.expr(
-                        f"({damping_num} * coalesce(_s, 0L)) div {damping_den}"
+                        f"({_DAMPING_NUM} * coalesce(_s, 0L)) div {_DAMPING_DEN}"
                     )
                 ).cast("bigint").alias("rank"),
             )
@@ -502,94 +584,30 @@ def _pagerank_rounds(
 def triangle_counts(
     edges: DataFrame,
     nodes: DataFrame | None = None,
-    u_col: str = "u",
-    v_col: str = "v",
-    id_col: str = "id",
 ) -> DataFrame:
     """Per-node triangle counts over an undirected edge list — the
-    degree-ordered wedge-join algorithm (the standard MapReduce
-    formulation, e.g. Suri & Vassilvitskii, WWW'11 "Counting Triangles and
-    the Curse of the Last Reducer").
-
-    Orient every edge from the (degree, id)-SMALLER endpoint to the larger;
-    every triangle then has exactly ONE node with two outgoing oriented
-    edges, so wedges (u -> v1, u -> v2) joined back against the oriented
-    edge set (v1 -> v2) enumerate each triangle exactly once.  The
-    orientation bounds per-node out-degree by O(sqrt(|E|)) on any graph, so
-    the wedge self-join never explodes on high-degree hubs — THE skew trap
-    of the naive formulation, where one celebrity node with degree d
-    contributes d² wedges.
-
-    Cost: one degree aggregate + one broadcast-free hash self-join on the
-    wedge apex + one hash semi-join of wedges against edges + one
-    per-corner count aggregate.  Everything is partitioned on node/edge
-    keys; nothing is collected.
+    degree-ordered wedge join of :func:`_triangles`, whose orientation keeps
+    a high-degree hub from exploding the wedge self-join.
 
     Returns (id, n_triangles) for every node in ``nodes`` (or every edge
     endpoint if ``nodes`` is None), zeros included.
     """
-    e = edges.select(
-        F.col(u_col).cast("bigint").alias("u"), F.col(v_col).cast("bigint").alias("v")
-    ).filter(F.col("u") != F.col("v"))
-    canon = e.select(
-        F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-    ).distinct()
-    # canon is consumed by the degree count, BOTH orientation joins, and
-    # the closing-edge join — checkpoint the deduped edge set once
-    canon = canon.localCheckpoint(eager=False)
-    ends = canon.select(F.col("u").alias("n")).union(
-        canon.select(F.col("v").alias("n"))
-    )
-    # orient by (deg, id): rank = deg * 2^31 + id gives one bigint total
-    # order (ids < 2^31 here; the 100 TB variant pairs the columns); the
-    # joins run over the E-row canonical set, not the 2E symmetrized one
-    rank = (
-        ends.groupBy("n")
-        .agg(F.count(F.lit(1)).alias("_d"))
-        .select("n", (F.col("_d") * F.lit(1 << 31) + F.col("n")).alias("rnk"))
-    )
-    ranked = (
-        canon.join(rank.select(F.col("n").alias("u"), F.col("rnk").alias("ru")), "u")
-        .join(rank.select(F.col("n").alias("v"), F.col("rnk").alias("rv")), "v")
-    )
-    oriented = ranked.select(
-        F.when(F.col("ru") < F.col("rv"), F.col("u")).otherwise(F.col("v")).alias("u"),
-        F.when(F.col("ru") < F.col("rv"), F.col("v")).otherwise(F.col("u")).alias("v"),
-    )
-    o1 = oriented.select(F.col("u").alias("w"), F.col("v").alias("a"))
-    o2 = oriented.select(F.col("u").alias("w"), F.col("v").alias("b"))
-    wedges = o1.join(o2, "w").filter(F.col("a") < F.col("b"))
-    closing = oriented.select(
-        F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-    )
-    triangles = wedges.join(closing, ["a", "b"])
-    corners = (
-        triangles.select(F.col("w").alias("id"))
-        .union(triangles.select(F.col("a").alias("id")))
-        .union(triangles.select(F.col("b").alias("id")))
-    )
-    counts = corners.groupBy("id").agg(F.count(F.lit(1)).alias("n_triangles"))
-    base = (
-        nodes.select(F.col(id_col).cast("bigint").alias("id")).distinct()
-        if nodes is not None
-        else ends.select(F.col("n").alias("id")).distinct()
-    )
+    canon = _canonical(edges)
+    _, counts = _triangles(canon)
+    base = _node_set(nodes, _endpoints(canon, "id"))
     return base.join(counts, "id", "left").select(
         "id", F.coalesce("n_triangles", F.lit(0)).alias("n_triangles")
     )
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Duplicate clusters from candidate pairs: (id, component, is_keeper).
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
+    """Duplicate clusters from candidate (id_a, id_b) pairs: (id, component,
+    is_keeper).
 
     ``component`` is the min doc id of the cluster (the canonical survivor
     — same keep-the-min convention as dedup.exact_duplicates);
     ``is_keeper`` marks it.  Feed any of the dedup pair generators in."""
-    cc = connected_components(pairs, id_a, id_b)
+    cc = connected_components(pairs)
     return cc.select(
         "id",
         "component",
@@ -602,9 +620,6 @@ def kcore_membership(
     k: int,
     n_rounds: int,
     nodes: DataFrame | None = None,
-    u_col: str = "u",
-    v_col: str = "v",
-    id_col: str = "id",
 ) -> DataFrame:
     """Bounded k-core peeling over an undirected edge list: ``n_rounds``
     rounds of "drop every node with degree < k, delete its edges", the
@@ -630,29 +645,13 @@ def kcore_membership(
     """
     if k < 1 or n_rounds < 1:
         raise ValueError(f"k and n_rounds must be >= 1, got k={k}, rounds={n_rounds}")
-    e = (
-        edges.select(
-            F.col(u_col).cast("bigint").alias("u"),
-            F.col(v_col).cast("bigint").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    base = (
-        nodes.select(F.col(id_col).cast("bigint").alias("id")).distinct()
-        if nodes is not None
-        else e.select(F.col("u").alias("id"))
-        .union(e.select(F.col("v").alias("id")))
-        .distinct()
-    )
+    e = _canonical(edges)
+    base = _node_set(nodes, _endpoints(e, "id"))
+
     def _survivors(edge_set):
-        ends = edge_set.select(F.col("u").alias("n")).union(
-            edge_set.select(F.col("v").alias("n"))
-        )
         return (
-            ends.groupBy("n")
+            _endpoints(edge_set, "n")
+            .groupBy("n")
             .agg(F.count(F.lit(1)).alias("_d"))
             .filter(F.col("_d") >= k)
             .select("n")
@@ -684,9 +683,6 @@ def label_propagation(
     edges: DataFrame,
     n_rounds: int,
     nodes: DataFrame | None = None,
-    u_col: str = "u",
-    v_col: str = "v",
-    id_col: str = "id",
 ) -> DataFrame:
     """Deterministic label-propagation communities (LPA) over an undirected
     edge list: every node starts as its own label; each round it adopts the
@@ -698,11 +694,13 @@ def label_propagation(
     Determinism is the engineering point: textbook LPA is scan-order- and
     tie-random, which cannot exist at 100 TB (retries and speculative
     tasks would flap).  Here the per-node update is ONE composite argmax —
-    ``max_by(label, count * 2^31 - label)`` (counts dominate, smaller
-    label wins ties; labels < 2^31, the same packing bound as
-    triangle_counts) — and the round count is FIXED, so the result is a
-    pure function of (edges, rounds), unrollable as a declarative oracle.
-    Each node also casts ONE vote for its own current label (the
+    ``max_by(label, count * 2^31 - label)`` via :func:`quality_argmax_key`
+    (counts dominate, smaller label wins ties) — and the round count is
+    FIXED, so the result is a pure function of (edges, rounds), unrollable
+    as a declarative oracle.  The packing needs 0 <= label < 2^31 and
+    count < 2^32; the amortized bounds guard folded into the same aggregate
+    raises on any node id outside that range instead of electing a wrong
+    label.  Each node also casts ONE vote for its own current label (the
     self-vote), which kills the two-node swap oscillation synchronous LPA
     is notorious for and covers isolated nodes without a special case.
 
@@ -712,20 +710,11 @@ def label_propagation(
     """
     if n_rounds < 1:
         raise ValueError(f"n_rounds must be >= 1, got {n_rounds}")
-    e = edges.select(
-        F.col(u_col).cast("bigint").alias("u"), F.col(v_col).cast("bigint").alias("v")
-    ).filter(F.col("u") != F.col("v"))
-    sym = (
-        e.select("u", "v")
-        .union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
+    e = _edges(edges).filter(F.col("u") != F.col("v"))
+    sym = _symmetrize(e).distinct().localCheckpoint(eager=False)
+    base = _node_set(nodes, sym.select(F.col("u").alias("id"))).localCheckpoint(
+        eager=False
     )
-    base = (
-        nodes.select(F.col(id_col).cast("bigint").alias("id")).distinct()
-        if nodes is not None
-        else sym.select(F.col("u").alias("id")).distinct()
-    ).localCheckpoint(eager=False)
     labels = base.select("id", F.col("id").alias("lab"))
     for _ in range(n_rounds):
         votes = (
@@ -734,11 +723,17 @@ def label_propagation(
             .unionByName(labels)
         )
         nb = votes.groupBy("id", "lab").agg(F.count(F.lit(1)).alias("_c"))
-        labels = nb.groupBy("id").agg(
-            F.max_by(
-                "lab", F.col("_c") * F.lit(1 << 31) - F.col("lab")
-            ).alias("lab")
-        ).localCheckpoint(eager=False)
+        labels = (
+            nb.groupBy("id")
+            .agg(
+                F.max_by(
+                    "lab", quality_argmax_key(F.col("_c"), F.col("lab"))
+                ).alias("lab"),
+                quality_argmax_bounds_ok(F.col("_c"), F.col("lab")).alias("_ok"),
+            )
+            .select("id", quality_argmax_guard(F.col("_ok"), F.col("lab")).alias("lab"))
+            .localCheckpoint(eager=False)
+        )
     return labels.select("id", F.col("lab").alias("community"))
 
 
@@ -746,10 +741,6 @@ def sssp_bounded(
     edges: DataFrame,
     seeds: DataFrame,
     n_rounds: int,
-    u_col: str = "u",
-    v_col: str = "v",
-    w_col: str = "w",
-    id_col: str = "id",
 ) -> DataFrame:
     """Bounded single-source(-set) shortest paths over DIRECTED weighted
     edges: ``n_rounds`` synchronous Bellman-Ford relaxations from the seed
@@ -773,16 +764,8 @@ def sssp_bounded(
     """
     if n_rounds < 1:
         raise ValueError(f"n_rounds must be >= 1, got {n_rounds}")
-    e = edges.select(
-        F.col(u_col).cast("bigint").alias("u"),
-        F.col(v_col).cast("bigint").alias("v"),
-        F.col(w_col).cast("bigint").alias("w"),
-    ).localCheckpoint(eager=False)
-    dist = (
-        seeds.select(F.col(id_col).cast("bigint").alias("id"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("bigint"))
-    )
+    e = _edges(edges, "w").localCheckpoint(eager=False)
+    dist = _ids(seeds).withColumn("dist", F.lit(0).cast("bigint"))
     for _ in range(n_rounds):
         relaxed = (
             e.join(dist.withColumnRenamed("id", "u"), "u")
@@ -801,14 +784,7 @@ def personalized_pagerank_integer(
     edges: DataFrame,
     seeds: DataFrame,
     n_iter: int = 3,
-    damping_num: int = 17,
-    damping_den: int = 20,
     scale: int = 10**12,
-    u_col: str = "u",
-    v_col: str = "v",
-    seed_col: str = "id",
-    nodes: DataFrame | None = None,
-    id_col: str = "id",
 ) -> DataFrame:
     """PERSONALIZED PageRank with the same integer-exact arithmetic as
     :func:`pagerank_integer` — the teleport mass returns to the SEED set
@@ -825,34 +801,18 @@ def personalized_pagerank_integer(
     broadcast (seed lists are query parameters, not data).  Same contract
     as the global variant: every node needs >= 1 out-edge; fixed rounds —
     the result is the n_iter-step power iteration, bit-identical in any
-    engine."""
-    e = edges.select(
-        F.col(u_col).cast("bigint").alias("u"),
-        F.col(v_col).cast("bigint").alias("v"),
-    )
-    if nodes is None:
-        node_df = e.select(F.col("u").alias("id")).union(
-            e.select(F.col("v").alias("id"))
-        ).distinct()
-    else:
-        node_df = nodes.select(F.col(id_col).cast("bigint").alias("id")).distinct()
-    node_df = node_df.localCheckpoint(eager=False)
-    seed_df = (
-        seeds.select(F.col(seed_col).cast("bigint").alias("id"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    engine.  The node set is the edge endpoints; seeds are ``seeds.id``."""
+    e = _edges(edges)
+    node_df = _endpoints(e, "id").distinct().localCheckpoint(eager=False)
+    seed_df = _ids(seeds).localCheckpoint(eager=False)
     n_seeds = seed_df.count()
     if n_seeds == 0:
         raise ValueError("personalized pagerank needs a non-empty seed set")
     if seed_df.join(node_df, "id", "left_anti").limit(1).count():
         raise ValueError("seed outside the node set")
-    if e.join(node_df, e["u"] == node_df["id"], "left_anti").limit(1).count():
-        raise ValueError("edge source outside the node set")
-    deg = e.groupBy("u").agg(F.count("*").alias("_d"))
-    ew = e.join(deg, "u").localCheckpoint(eager=False)
+    ew = _out_edges(e, node_df)
 
-    base = ((damping_den - damping_num) * scale) // (damping_den * n_seeds)
+    base = ((_DAMPING_DEN - _DAMPING_NUM) * scale) // (_DAMPING_DEN * n_seeds)
     is_seed = F.col("_s_id").isNotNull()
     marked = node_df.join(
         F.broadcast(seed_df.select(F.col("id").alias("_s_id"))),
@@ -872,8 +832,6 @@ def personalized_pagerank_integer(
         r,
         F.when(F.col("_seed"), F.lit(base)).otherwise(F.lit(0)),
         n_iter,
-        damping_num,
-        damping_den,
     )
 
 
@@ -881,8 +839,6 @@ def jaccard_link_prediction(
     edges: DataFrame,
     min_shared: int = 1,
     max_degree: int | None = None,
-    u_col: str = "u",
-    v_col: str = "v",
 ) -> DataFrame:
     """Link prediction by NEIGHBOR Jaccard (Liben-Nowell & Kleinberg,
     CIKM'03): for every non-adjacent node pair at distance 2,
@@ -909,15 +865,7 @@ def jaccard_link_prediction(
     contract: an explicit recall trade (pairs witnessed ONLY through
     dropped hubs are missed; a hub this size usually witnesses most of
     the graph, making those predictions uninformative anyway)."""
-    e = edges.select(
-        F.col(u_col).cast("bigint").alias("u"),
-        F.col(v_col).cast("bigint").alias("v"),
-    ).filter(F.col("u") != F.col("v"))
-    canon = (
-        e.select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    canon = _canonical(edges)
     adj = canon.select(F.col("u").alias("n"), F.col("v").alias("m")).unionByName(
         canon.select(F.col("v").alias("n"), F.col("u").alias("m"))
     )
@@ -960,13 +908,10 @@ def jaccard_link_prediction(
 def local_clustering(
     edges: DataFrame,
     nodes: DataFrame | None = None,
-    u_col: str = "u",
-    v_col: str = "v",
-    id_col: str = "id",
 ) -> DataFrame:
     """Per-node LOCAL CLUSTERING COEFFICIENT over an undirected edge list —
-    the triangle-counts engine (degree-ordered wedge join, see
-    ``triangle_counts``) extended with the degree denominator:
+    the triangle engine (:func:`_triangles`, shared with
+    :func:`triangle_counts`) extended with the degree denominator:
 
         lcc(v) = 2 * triangles(v) / (deg(v) * (deg(v) - 1))
 
@@ -985,47 +930,9 @@ def local_clustering(
     Returns (id, degree, n_triangles, lcc_num, lcc_den, lcc) for every node
     in ``nodes`` (or every edge endpoint), zeros/NULLs included.
     """
-    e = edges.select(
-        F.col(u_col).cast("bigint").alias("u"), F.col(v_col).cast("bigint").alias("v")
-    ).filter(F.col("u") != F.col("v"))
-    canon = (
-        e.select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        # consumed by the degree count, both orientation joins and the
-        # closing-edge join — checkpoint the deduped edge set once
-        .localCheckpoint(eager=False)
-    )
-    ends = canon.select(F.col("u").alias("n")).union(
-        canon.select(F.col("v").alias("n"))
-    )
-    deg = ends.groupBy("n").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    rank = deg.select("n", (F.col("d") * F.lit(1 << 31) + F.col("n")).alias("rnk"))
-    ranked = (
-        canon.join(rank.select(F.col("n").alias("u"), F.col("rnk").alias("ru")), "u")
-        .join(rank.select(F.col("n").alias("v"), F.col("rnk").alias("rv")), "v")
-    )
-    oriented = ranked.select(
-        F.when(F.col("ru") < F.col("rv"), F.col("u")).otherwise(F.col("v")).alias("u"),
-        F.when(F.col("ru") < F.col("rv"), F.col("v")).otherwise(F.col("u")).alias("v"),
-    )
-    o1 = oriented.select(F.col("u").alias("w"), F.col("v").alias("a"))
-    o2 = oriented.select(F.col("u").alias("w"), F.col("v").alias("b"))
-    wedges = o1.join(o2, "w").filter(F.col("a") < F.col("b"))
-    closing = oriented.select(
-        F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-    )
-    triangles = wedges.join(closing, ["a", "b"])
-    corners = (
-        triangles.select(F.col("w").alias("id"))
-        .union(triangles.select(F.col("a").alias("id")))
-        .union(triangles.select(F.col("b").alias("id")))
-    )
-    counts = corners.groupBy("id").agg(F.count(F.lit(1)).alias("n_triangles"))
-    base = (
-        nodes.select(F.col(id_col).cast("bigint").alias("id")).distinct()
-        if nodes is not None
-        else ends.select(F.col("n").alias("id")).distinct()
-    )
+    canon = _canonical(edges)
+    deg, counts = _triangles(canon)
+    base = _node_set(nodes, _endpoints(canon, "id"))
     out = (
         base.join(counts, "id", "left")
         .join(deg.select(F.col("n").alias("id"), "d"), "id", "left")
@@ -1052,12 +959,8 @@ def local_clustering(
 def modularity_by_community(
     edges: DataFrame,
     assign: DataFrame,
-    u_col: str = "u",
-    v_col: str = "v",
-    id_col: str = "id",
-    community_col: str = "community",
 ) -> DataFrame:
-    """Newman MODULARITY of a given community assignment — the quality
+    """Newman MODULARITY of a given (id, community) assignment — the quality
     measurement for whatever produced the labels (connected components,
     label propagation, an external clustering): per community c,
 
@@ -1082,17 +985,10 @@ def modularity_by_community(
     this is the measurement loop you run after every community-detection
     round at 100 TB, so it must stay one pass.
     """
-    e = edges.select(
-        F.col(u_col).cast("bigint").alias("u"), F.col(v_col).cast("bigint").alias("v")
-    ).filter(F.col("u") != F.col("v"))
-    canon = (
-        e.select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    canon = _canonical(edges)
     a = assign.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.col(community_col).cast("bigint").alias("community"),
+        F.col("id").cast("bigint").alias("id"),
+        F.col("community").cast("bigint").alias("community"),
     )
     labeled = (
         canon.join(a.select(F.col("id").alias("u"), F.col("community").alias("cu")), "u")
@@ -1103,11 +999,9 @@ def modularity_by_community(
         .groupBy(F.col("cu").alias("community"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("e_in"))
     )
-    ends = canon.select(F.col("u").alias("id")).union(
-        canon.select(F.col("v").alias("id"))
-    )
     deg_c = (
-        ends.join(a, "id")
+        _endpoints(canon, "id")
+        .join(a, "id")
         .groupBy("community")
         .agg(F.count(F.lit(1)).cast("bigint").alias("deg_c"))
     )
@@ -1144,11 +1038,7 @@ def modularity_by_community(
     )
 
 
-def degree_assortativity(
-    edges: DataFrame,
-    u_col: str = "u",
-    v_col: str = "v",
-) -> DataFrame:
+def degree_assortativity(edges: DataFrame) -> DataFrame:
     """DEGREE ASSORTATIVITY (Newman's r) of an undirected graph — do
     high-degree nodes attach to other high-degree nodes (r > 0, social
     networks) or to leaves (r < 0, hub-and-spoke / star topologies)?  The
@@ -1170,18 +1060,8 @@ def degree_assortativity(
     a hub's edge list, which is the same row count every per-edge operator
     here already touches.
     """
-    e = edges.select(
-        F.col(u_col).cast("bigint").alias("u"), F.col(v_col).cast("bigint").alias("v")
-    ).filter(F.col("u") != F.col("v"))
-    canon = (
-        e.select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    ends = canon.select(F.col("u").alias("n")).union(
-        canon.select(F.col("v").alias("n"))
-    )
-    deg = ends.groupBy("n").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    canon = _canonical(edges)
+    deg = _degrees(canon)
     paired = (
         canon.join(deg.select(F.col("n").alias("u"), F.col("d").alias("du")), "u")
         .join(deg.select(F.col("n").alias("v"), F.col("d").alias("dv")), "v")
