@@ -8,6 +8,9 @@ quirk, malformed rows and sentinel dates.
 
 from __future__ import annotations
 
+import re
+import shutil
+
 import pytest
 
 from tests import traffic_sim
@@ -185,13 +188,86 @@ def test_zordered_ingest_identical_results_and_bbox_skipping(
     assert touched <= len(zb) // 2, (touched, len(zb))
 
 
+def _month_partition_filters(df) -> set[tuple[int, ...]]:
+    """The ``month IN (...)`` value lists in the plan's scan partition
+    filters."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return {
+        tuple(int(v) for v in m.split(","))
+        for pf in re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+        for m in re.findall(r"month#\d+ IN \(([\d,\s]+)\)", pf)
+    }
+
+
 def test_parquet_layout_prunes_months(parquet_engines):
     """The month filter must reach the scan as a partition filter — the
-    Catalyst replacement for the reference's driver-side path loop."""
+    Catalyst replacement for the reference's driver-side path loop — and two
+    windows planned on the same engine each carry their own months."""
     _, pq_eng = parquet_engines
-    df = pq_eng.overspeed_count_df(*_args(BBOX), "2016-06-15", "2016-07-02")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "month" in plan, plan
+    for dates, months in (
+        (("2016-06-15", "2016-07-02"), (201606, 201607)),
+        (("2016-08-10", "2016-10-05"), (201608, 201609, 201610)),
+    ):
+        df = pq_eng.overspeed_count_df(*_args(BBOX), *dates)
+        assert _month_partition_filters(df) == {months}, dates
+
+
+def test_parquet_facade_plans_launch_no_jobs(spark, parquet_engines):
+    """Each parquet table is opened once per engine: after one warm call per
+    entry point, building a plan for a new window runs no Spark job (no
+    directory listing, no schema inference)."""
+    _, pq_eng = parquet_engines
+    pq_eng.get_accident_count(*_args(BBOX), "2016-07-01", "2016-09-15")
+    pq_eng.get_overspeed_count(*_args(BBOX), "2016-06-15", "2016-08-02")
+    pq_eng.get_average_speed(*_args(BBOX), "2016-12-15")
+    sc = spark.sparkContext
+    jobs = {}
+    for name, build in (
+        ("accident", lambda: pq_eng.accident_count_df(*_args(BBOX), "2016-08-03", "2016-11-20")),
+        ("overspeed", lambda: pq_eng.overspeed_count_df(*_args(BBOX), "2016-09-02", "2016-11-11")),
+        ("avgspeed", lambda: pq_eng.average_speed_df(*_args(BBOX), "2016-10-09")),
+    ):
+        group = f"test-plan-jobs-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc._jsc.clearJobGroup()
+        # job events reach the status store through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == {"accident": 0, "overspeed": 0, "avgspeed": 0}
+
+
+def test_parquet_handles_leak_no_month_filter(parquet_engines):
+    """Reused table handles must not carry one call's month filter into the
+    next: narrow, wide, narrow again, then an average-speed call whose
+    history and "today" slices select different months."""
+    csv_eng, pq_eng = parquet_engines
+    one_month = _args(BBOX) + ("2016-07-01", "2016-07-31")
+    four_months = _args(BBOX) + ("2016-06-15", "2016-09-20")
+    for args in (one_month, four_months, one_month):
+        got = sorted(pq_eng.get_overspeed_count(*args))
+        assert got == sorted(csv_eng.get_overspeed_count(*args)), args
+        assert got, args
+    avg = _args(BBOX) + ("2016-07-03",)
+    got = sorted(pq_eng.get_average_speed(*avg))
+    assert got == sorted(csv_eng.get_average_speed(*avg))
+    assert got
+
+
+def test_parquet_layout_without_accident_table(spark, parquet_engines, tmp_path):
+    """Tables open lazily: a layout ingested without an accident file still
+    constructs and serves the two speed entry points."""
+    _, pq_eng = parquet_engines
+    base = tmp_path / "no_accident"
+    shutil.copytree(pq_eng.base, base, ignore=shutil.ignore_patterns("accident"))
+    eng = TrafficEngine(spark, str(base), layout="parquet", mode="parity")
+    for method, args in (
+        ("get_overspeed_count", _args(BBOX) + ("2016-06-15", "2016-08-02")),
+        ("get_average_speed", _args(BBOX) + ("2016-12-15",)),
+    ):
+        assert sorted(getattr(eng, method)(*args)) == sorted(getattr(pq_eng, method)(*args))
 
 
 def test_timezone_invariance(spark, traffic_dir):
@@ -242,10 +318,14 @@ def test_fixed_mode_keeps_at_least_parity_rows(spark, traffic_dir):
 
 def test_months_none_symmetric_across_layouts(parquet_engines):
     """months=None must mean 'every month on disk' in BOTH layouts (the CSV
-    path used to return an empty frame while parquet returned everything)."""
+    path used to return an empty frame while parquet returned everything),
+    and months=[] must mean no month in both (parquet used to read every
+    month)."""
     csv_eng, pq_eng = parquet_engines
     assert csv_eng.speed_data(None).count() == pq_eng.speed_data(None).count() > 0
     assert csv_eng.fee_data(None).count() == pq_eng.fee_data(None).count() > 0
+    assert csv_eng.speed_data([]).count() == pq_eng.speed_data([]).count() == 0
+    assert csv_eng.fee_data([]).count() == pq_eng.fee_data([]).count() == 0
 
 
 def test_parquet_mode_marker_mismatch_raises(spark, traffic_dir, tmp_path_factory):

@@ -12,6 +12,11 @@ Two storage layouts:
 - ``layout="parquet"``: the engine-native month-partitioned Parquet written by
   ``sources.parquet.write_month_partitioned`` — month selection is Catalyst
   partition pruning, no driver enumeration at all.
+
+Parquet tables are a snapshot: an engine lists each table's files and reads
+its schema once, at the table's first use, and every later call plans on
+that handle, so building a facade plan launches no Spark job.  After
+re-ingesting into the same directory, construct a new engine.
 """
 
 from __future__ import annotations
@@ -64,7 +69,12 @@ class TrafficEngine:
     table via ``catalog.load_table`` likewise pins UTC + parquet
     ``nanosAsLong``.  Unrelated queries on the same session inherit those
     timestamp semantics; collect results before interleaving engines or
-    zones."""
+    zones.
+
+    On the parquet layout each table is opened (files listed, schema read)
+    once, at first use, and reused by every later call: the engine sees the
+    directory as it was then.  Re-ingesting into the same directory needs a
+    new engine."""
 
     def __init__(
         self,
@@ -80,6 +90,7 @@ class TrafficEngine:
         self.mode = mode
         self.timezone = timezone
         self.tz = ZoneInfo(timezone) if timezone != "UTC" else dt.timezone.utc
+        self._tables: dict[str, DataFrame] = {}
         self._pin_timezone()
         if layout == "parquet":
             self._check_ingest_mode()
@@ -116,16 +127,25 @@ class TrafficEngine:
 
     # --- table loading -------------------------------------------------------
 
+    def _parquet(self, name: str) -> DataFrame:
+        """The parquet table ``name``, opened on first use and reused after:
+        ``spark.read.parquet`` lists the directory and runs a schema
+        inference job, which would otherwise repeat on every read.  Lazy, so
+        a layout without ``accident/`` still serves the other entry points."""
+        if name not in self._tables:
+            self._tables[name] = self.spark.read.parquet(os.path.join(self.base, name))
+        return self._tables[name]
+
     def accident(self) -> DataFrame:
         if self.layout == "parquet":
-            return self.spark.read.parquet(os.path.join(self.base, "accident"))
+            return self._parquet("accident")
         return read_accident_csv(
             self.spark, os.path.join(self.base, ACCIDENT_FILE), mode=self.mode
         )
 
     def speed_base(self) -> DataFrame:
         if self.layout == "parquet":
-            return self.spark.read.parquet(os.path.join(self.base, "speed_base"))
+            return self._parquet("speed_base")
         return read_speed_base_csv(
             self.spark, os.path.join(self.base, "speed_base.csv")
         )
@@ -136,9 +156,10 @@ class TrafficEngine:
     def _pruned(self, name: str, months: list[str] | None) -> DataFrame:
         """Partitioned read with month selection as a partition-column filter
         — Catalyst prunes the scan to the requested months at planning time,
-        replacing the reference's driver-side path loop (D4)."""
-        df = self.spark.read.parquet(os.path.join(self.base, name))
-        if months:
+        replacing the reference's driver-side path loop (D4).  ``None`` means
+        every month; ``[]`` selects none, as on the CSV layout."""
+        df = self._parquet(name)
+        if months is not None:
             df = df.filter(F.col("month").isin([int(m) for m in months]))
         return df.drop("month")
 
