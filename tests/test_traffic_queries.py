@@ -239,6 +239,88 @@ def test_parquet_facade_plans_launch_no_jobs(spark, parquet_engines):
     assert jobs == {"accident": 0, "overspeed": 0, "avgspeed": 0}
 
 
+def test_facade_plan_py4j_round_trips(parquet_engines, monkeypatch):
+    """Facade plans are built from SQL text, not PySpark ``Column`` trees,
+    whose every call adds call-site capture round trips: building a plan for
+    a new window on a warm engine stays within a small py4j budget."""
+    import gc
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    _, pq_eng = parquet_engines
+    pq_eng.get_accident_count(*_args(BBOX), "2016-07-01", "2016-09-15")
+    pq_eng.get_overspeed_count(*_args(BBOX), "2016-06-15", "2016-08-02")
+    pq_eng.get_average_speed(*_args(BBOX), "2016-12-15")
+    calls = [0]
+    send = ClientServerConnection.send_command
+    building_thread = threading.get_ident()
+
+    def counted(self, command):
+        # other threads release dropped Java objects through py4j too; only
+        # the building thread's round trips are the build's
+        calls[0] += threading.get_ident() == building_thread
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    trips = {}
+    for name, build in (
+        ("accident", lambda: pq_eng.accident_count_df(*_args(BBOX), "2016-08-04", "2016-11-21")),
+        ("overspeed", lambda: pq_eng.overspeed_count_df(*_args(BBOX), "2016-09-03", "2016-11-12")),
+        ("avgspeed", lambda: pq_eng.average_speed_df(*_args(BBOX), "2016-10-10")),
+    ):
+        # nor may a cyclic-garbage pass release earlier objects mid-build
+        gc.collect()
+        gc.disable()
+        calls[0] = 0
+        try:
+            build()
+        finally:
+            gc.enable()
+        trips[name] = calls[0]
+    assert trips["accident"] <= 40, trips
+    assert trips["overspeed"] <= 150, trips
+    assert trips["avgspeed"] <= 300, trips
+
+
+@pytest.mark.parametrize("layout", [0, 1], ids=["csv", "parquet"])
+@pytest.mark.parametrize("method", ["accident_count_df", "overspeed_count_df", "average_speed_df"])
+def test_non_numeric_bbox_raises_at_plan_build(parquet_engines, layout, method):
+    """Bbox values become SQL literals through ``float()``: a non-number is
+    rejected while the plan is built, before any SQL text exists."""
+    eng = parquet_engines[layout]
+    dates = ("2016-12-15",) if method == "average_speed_df" else ("2016-07-01", "2016-09-15")
+    with pytest.raises(ValueError):
+        getattr(eng, method)("1) OR (1=1", 116.0, 39.0, 36.0, *dates)
+
+
+def _bbox_rows(eng, bbox):
+    return (
+        sorted(eng.get_accident_count(*_args(bbox), "2016-07-01", "2016-09-15")),
+        sorted(eng.get_overspeed_count(*_args(bbox), "2016-06-15", "2016-08-02")),
+    )
+
+
+@pytest.mark.parametrize("layout", [0, 1], ids=["csv", "parquet"])
+def test_infinite_bbox_edges_equal_full_extent(parquet_engines, layout):
+    eng = parquet_engines[layout]
+    inf = float("inf")
+    got = _bbox_rows(eng, (-inf, inf, -inf, inf))
+    assert got == _bbox_rows(eng, (-180.0, 180.0, -90.0, 90.0))
+    assert all(got)
+
+
+@pytest.mark.parametrize("layout", [0, 1], ids=["csv", "parquet"])
+def test_nan_upper_bbox_edge_equals_infinite(parquet_engines, layout):
+    """Spark orders NaN above every double, so a NaN upper edge bounds
+    nothing, the same as an infinite one."""
+    eng = parquet_engines[layout]
+    nan, inf = float("nan"), float("inf")
+    got = _bbox_rows(eng, (116.0, nan, 36.0, nan))
+    assert got == _bbox_rows(eng, (116.0, inf, 36.0, inf))
+    assert all(got)
+
+
 def test_parquet_handles_leak_no_month_filter(parquet_engines):
     """Reused table handles must not carry one call's month filter into the
     next: narrow, wide, narrow again, then an average-speed call whose
@@ -268,6 +350,24 @@ def test_parquet_layout_without_accident_table(spark, parquet_engines, tmp_path)
         ("get_average_speed", _args(BBOX) + ("2016-12-15",)),
     ):
         assert sorted(getattr(eng, method)(*args)) == sorted(getattr(pq_eng, method)(*args))
+
+
+def test_parquet_engine_sees_appended_month(spark, parquet_engines, tmp_path):
+    """A month appended after an engine opened its tables (its ``month=``
+    directories copied in later) is answered by that same engine exactly as
+    by a new one, not silently from the stale file listing."""
+    _, pq_eng = parquet_engines
+    last = traffic_sim.MONTHS[-1]
+    base = tmp_path / "appended"
+    shutil.copytree(pq_eng.base, base, ignore=shutil.ignore_patterns(f"month={last}"))
+    args = _args(BBOX) + (f"{last[:4]}-{last[4:]}-01", f"{last[:4]}-{last[4:]}-28")
+    eng = TrafficEngine(spark, str(base), layout="parquet", mode="parity")
+    assert eng.get_overspeed_count(*args) == []
+    for t in ("speed_data", "fee_data"):
+        shutil.copytree(f"{pq_eng.base}/{t}/month={last}", base / t / f"month={last}")
+    want = sorted(TrafficEngine(spark, str(base), layout="parquet", mode="parity").get_overspeed_count(*args))
+    assert want
+    assert sorted(eng.get_overspeed_count(*args)) == want
 
 
 def test_timezone_invariance(spark, traffic_dir):

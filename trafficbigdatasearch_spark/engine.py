@@ -13,10 +13,12 @@ Two storage layouts:
   ``sources.parquet.write_month_partitioned`` — month selection is Catalyst
   partition pruning, no driver enumeration at all.
 
-Parquet tables are a snapshot: an engine lists each table's files and reads
-its schema once, at the table's first use, and every later call plans on
-that handle, so building a facade plan launches no Spark job.  After
-re-ingesting into the same directory, construct a new engine.
+Parquet tables are opened once: an engine lists each table's files and reads
+its schema at the table's first use, and every later call plans on that
+handle, so building a facade plan launches no Spark job.  A month appended
+later (a new ``month=YYYYMM`` directory) is picked up by reopening the table
+the first time a call asks for it; a month rewritten in place is not seen
+until a new engine is constructed.
 """
 
 from __future__ import annotations
@@ -26,7 +28,6 @@ import os
 from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from trafficbigdatasearch_spark.queries import (
     accident_count,
@@ -72,9 +73,10 @@ class TrafficEngine:
     zones.
 
     On the parquet layout each table is opened (files listed, schema read)
-    once, at first use, and reused by every later call: the engine sees the
-    directory as it was then.  Re-ingesting into the same directory needs a
-    new engine."""
+    once, at first use, and reused by every later call.  A call that asks for
+    a month the handle does not know, and whose ``month=`` directory now
+    exists, reopens that table; any other change (a month rewritten in
+    place, a re-ingest into the same directory) needs a new engine."""
 
     def __init__(
         self,
@@ -90,7 +92,8 @@ class TrafficEngine:
         self.mode = mode
         self.timezone = timezone
         self.tz = ZoneInfo(timezone) if timezone != "UTC" else dt.timezone.utc
-        self._tables: dict[str, DataFrame] = {}
+        # parquet table name -> (handle, the ``month=`` values it was opened with)
+        self._tables: dict[str, tuple[DataFrame, set[str]]] = {}
         self._pin_timezone()
         if layout == "parquet":
             self._check_ingest_mode()
@@ -131,10 +134,18 @@ class TrafficEngine:
         """The parquet table ``name``, opened on first use and reused after:
         ``spark.read.parquet`` lists the directory and runs a schema
         inference job, which would otherwise repeat on every read.  Lazy, so
-        a layout without ``accident/`` still serves the other entry points."""
+        a layout without ``accident/`` still serves the other entry points.
+
+        The table's ``month=`` directories are listed (a file-system call,
+        no Spark job) before the open, so the recorded set never names a
+        month the handle lacks."""
         if name not in self._tables:
-            self._tables[name] = self.spark.read.parquet(os.path.join(self.base, name))
-        return self._tables[name]
+            path = os.path.join(self.base, name)
+            months = {
+                p.rsplit("=", 1)[1] for p in _glob(self.spark, os.path.join(path, "month=*"))
+            }
+            self._tables[name] = (self.spark.read.parquet(path), months)
+        return self._tables[name][0]
 
     def accident(self) -> DataFrame:
         if self.layout == "parquet":
@@ -157,11 +168,25 @@ class TrafficEngine:
         """Partitioned read with month selection as a partition-column filter
         — Catalyst prunes the scan to the requested months at planning time,
         replacing the reference's driver-side path loop (D4).  ``None`` means
-        every month; ``[]`` selects none, as on the CSV layout."""
+        every month; ``[]`` selects none, as on the CSV layout.
+
+        A requested month the handle does not know, whose directory exists
+        now, was appended after the open: the table is reopened (one schema
+        inference job, only when the data changed)."""
         df = self._parquet(name)
-        if months is not None:
-            df = df.filter(F.col("month").isin([int(m) for m in months]))
-        return df.drop("month")
+        if months is None:
+            return df.drop("month")
+        wanted = [int(m) for m in months]
+        unknown = {str(m) for m in wanted} - self._tables[name][1]
+        if any(
+            _path_exists(self.spark, os.path.join(self.base, name, f"month={m}"))
+            for m in unknown
+        ):
+            del self._tables[name]
+            df = self._parquet(name)
+        # SQL text has no empty IN list; ``false`` keeps no row, as ``IN ()`` would
+        cond = f"month IN ({', '.join(map(str, wanted))})" if wanted else "false"
+        return df.filter(cond).drop("month")
 
     def _csv_paths(self, months: list[str] | None, suffix: str) -> list[str]:
         """Existing per-month file paths; ``months=None`` means EVERY month

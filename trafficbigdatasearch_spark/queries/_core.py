@@ -13,14 +13,55 @@ Design notes for 100 TB scale:
   output (src/OverSpeedCount.scala:133-136) — here one CASE WHEN derived
   ``car_type`` turns that into a single grouped aggregate: one shuffle, one
   pass, identical result set.
+
+Expressions are SQL text handed to string-taking DataFrame methods
+(``filter(str)``, ``selectExpr``, ``groupBy(str)``, ``hint``), not trees of
+PySpark ``Column`` calls: PySpark wraps every ``Column``/``functions`` call
+in call-site capture, about a dozen py4j round trips each, which made plan
+building cost more than Catalyst's own phases.  ``F.expr`` appears only
+where the API needs a ``Column`` (join conditions, aggregates).  Only numbers
+enter the text: integers via ``int()`` and doubles via :func:`sql_double`.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+#: The 4-segment classification the reference runs as 4 separate scans
+#: (src/OverSpeedCount.scala:133-136, src/AverageSpeed.scala:112-115):
+#: class=1/type=0 -> 01, class>1/type=0 -> 02, class=1/type=1 -> 03,
+#: class>1/type=1 -> 04.  DOUBLE comparison of the string columns matches the
+#: reference SQL's implicit numeric promotion (an int cast would reject
+#: decimal-formatted values like "2.0" that the reference accepts); rows that
+#: fit no segment -> NULL.
+CAR_TYPE_SQL = (
+    "CASE"
+    " WHEN try_cast(`class` AS DOUBLE) = 1 AND try_cast(`type` AS DOUBLE) = 0 THEN '01'"
+    " WHEN try_cast(`class` AS DOUBLE) > 1 AND try_cast(`type` AS DOUBLE) = 0 THEN '02'"
+    " WHEN try_cast(`class` AS DOUBLE) = 1 AND try_cast(`type` AS DOUBLE) = 1 THEN '03'"
+    " WHEN try_cast(`class` AS DOUBLE) > 1 AND try_cast(`type` AS DOUBLE) = 1 THEN '04'"
+    " END"
+)
+
+#: Per-segment speed limit (src/OverSpeedCount.scala:133-136): heavy trucks
+#: (car_type 04) 100, everything else 120.
+OVERSPEED_THRESHOLD_SQL = "CASE WHEN car_type = '04' THEN 100 ELSE 120 END"
+
+
+def sql_double(x) -> str:
+    """``x`` as a Spark SQL DOUBLE literal — the one way a caller-supplied
+    non-integer value enters the facade's SQL text.  ``float(x)`` raises
+    ``ValueError`` on anything that is not a number, so no caller string is
+    ever interpolated."""
+    v = float(x)
+    if math.isfinite(v):
+        return repr(v) + "D"
+    name = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
 
 
 class BBox:
@@ -32,9 +73,16 @@ class BBox:
         self.lat_lower = lat_lower
         self.lat_upper = lat_upper
 
-    def predicate(self, lon: Column, lat: Column) -> Column:
-        return lon.between(self.lon_lower, self.lon_upper) & lat.between(
-            self.lat_lower, self.lat_upper
+    def sql(self, lon: str, lat: str) -> str:
+        """Containment predicate over the columns ``lon``/``lat`` as SQL
+        text; raises ``ValueError`` when an edge is not a number."""
+        lon_lo, lon_hi, lat_lo, lat_hi = (
+            sql_double(v)
+            for v in (self.lon_lower, self.lon_upper, self.lat_lower, self.lat_upper)
+        )
+        return (
+            f"({lon} >= {lon_lo} AND {lon} <= {lon_hi})"
+            f" AND ({lat} >= {lat_lo} AND {lat} <= {lat_hi})"
         )
 
 
@@ -59,9 +107,7 @@ def station_guids(speed_base: DataFrame, bbox: BBox) -> DataFrame:
     the reference joins the raw GUID list, so duplicate station rows would
     fan out, exactly as in the reference.
     """
-    return speed_base.filter(
-        bbox.predicate(F.col("LON"), F.col("LAT"))
-    ).select("GDCSYBM")
+    return speed_base.filter(bbox.sql("LON", "LAT")).select("GDCSYBM")
 
 
 def join_stations(speed: DataFrame, guids: DataFrame) -> DataFrame:
@@ -70,17 +116,14 @@ def join_stations(speed: DataFrame, guids: DataFrame) -> DataFrame:
     Output shape = the reference's ``speed_YYYYMM`` tables:
     (guid, plate, time, speed, hour).
     """
-    return (
-        speed.join(
-            F.broadcast(guids), speed["SITE_GUID"] == guids["GDCSYBM"], "inner"
-        )
-        .select(
-            F.col("SITE_GUID").alias("guid"),
-            F.col("HPHM").alias("plate"),
-            F.col("WZSJMillis").alias("time"),
-            F.col("CLSD").alias("speed"),
-            F.col("WZSJHourOfDay").alias("hour"),
-        )
+    return speed.join(
+        guids.hint("broadcast"), F.expr("SITE_GUID = GDCSYBM"), "inner"
+    ).selectExpr(
+        "SITE_GUID AS guid",
+        "HPHM AS plate",
+        "WZSJMillis AS time",
+        "CLSD AS speed",
+        "WZSJHourOfDay AS hour",
     )
 
 
@@ -95,11 +138,6 @@ def months_in_range(start: dt.date, end: dt.date) -> int:
     trigger: the reference's UNION (and thus parity dedup) only exists from
     the second month on."""
     return (end.year - start.year) * 12 + (end.month - start.month) + 1
-
-
-def month_of_millis(col: Column) -> Column:
-    """Epoch millis -> ``yyyyMM`` string in the session timezone."""
-    return F.date_format(F.timestamp_millis(col), "yyyyMM")
 
 
 def join_toll_class(
@@ -129,43 +167,29 @@ def join_toll_class(
     (speed, hour, class, type) plus any ``carry`` columns from the speed side
     (e.g. the event-time column the streaming pipeline windows on).
     """
-    cond = (speed["plate"] == fee["ENVEHPLATE"]) & speed["time"].between(
-        fee["ENTIMEMillis"], fee["EXTIMEMillis"]
-    )
+    cond = "plate = ENVEHPLATE AND (`time` >= ENTIMEMillis AND `time` <= EXTIMEMillis)"
     if month_key:
-        cond = cond & (
-            month_of_millis(speed["time"]) == month_of_millis(fee["ENTIMEMillis"])
+        # calendar month of epoch millis, in the session timezone
+        cond = (
+            f"({cond}) AND date_format(timestamp_millis(`time`), 'yyyyMM')"
+            " = date_format(timestamp_millis(ENTIMEMillis), 'yyyyMM')"
         )
-    return speed.join(fee, cond, "inner").select(
-        speed["speed"],
-        speed["hour"],
-        fee["EXVEHCLASS"].alias("class"),
-        fee["EXTRUCKFLAG"].alias("type"),
-        *[speed[c] for c in carry or []],
+    return speed.join(fee, F.expr(cond), "inner").selectExpr(
+        "speed",
+        "hour",
+        "EXVEHCLASS AS class",
+        "EXTRUCKFLAG AS type",
+        *[f"`{c}`" for c in carry or []],
     )
 
 
 def overspeed_threshold() -> Column:
-    """Per-segment speed limit (src/OverSpeedCount.scala:133-136): heavy
-    trucks (car_type 04) 100, everything else 120.  ONE home for the
+    """:data:`OVERSPEED_THRESHOLD_SQL` as a Column.  ONE home for the
     thresholds — batch and streaming pipelines must agree."""
-    return F.when(F.col("car_type") == "04", 100).otherwise(120)
+    return F.expr(OVERSPEED_THRESHOLD_SQL)
 
 
 def car_type_col() -> Column:
-    """The 4-segment classification the reference runs as 4 separate scans
-    (src/OverSpeedCount.scala:133-136, src/AverageSpeed.scala:112-115):
-    class=1/type=0 -> 01, class>1/type=0 -> 02, class=1/type=1 -> 03,
-    class>1/type=1 -> 04.  DOUBLE comparison of the string columns matches
-    the reference SQL's implicit numeric promotion (an int cast would reject
-    decimal-formatted values like "2.0" that the reference accepts); rows
-    that fit no segment -> NULL.
-    """
-    cls = F.col("class").try_cast("double")
-    typ = F.col("type").try_cast("double")
-    return (
-        F.when((cls == 1) & (typ == 0), "01")
-        .when((cls > 1) & (typ == 0), "02")
-        .when((cls == 1) & (typ == 1), "03")
-        .when((cls > 1) & (typ == 1), "04")
-    )
+    """:data:`CAR_TYPE_SQL` as a Column, over the ``class``/``type`` columns
+    of :func:`join_toll_class`'s output."""
+    return F.expr(CAR_TYPE_SQL)

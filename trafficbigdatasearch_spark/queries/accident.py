@@ -35,12 +35,11 @@ def accident_count(
 ) -> DataFrame:
     start = parse_date(start_date)
     end = parse_date(end_date) + dt.timedelta(days=1)
+    lo, hi = date_millis(start, tz), date_millis(end, tz)
+    in_bbox = bbox.sql("CASELONGITUDE", "CASELATITUDE")
     return (
-        accident.filter(
-            F.col("timestamp").between(date_millis(start, tz), date_millis(end, tz))
-            & bbox.predicate(F.col("CASELONGITUDE"), F.col("CASELATITUDE"))
-        )
+        accident.filter(f"(`timestamp` >= {lo} AND `timestamp` <= {hi}) AND ({in_bbox})")
         .groupBy("hour")
-        .agg(F.count("*").alias("accident_num"))
-        .select(F.col("hour").alias("time_period"), "accident_num")
+        .agg(F.expr("count(*) AS accident_num"))
+        .withColumnRenamed("hour", "time_period")
     )

@@ -30,9 +30,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trafficbigdatasearch_spark.queries._core import (
+    CAR_TYPE_SQL,
     BBox,
     months_in_range,
-    car_type_col,
     date_millis,
     join_stations,
     join_toll_class,
@@ -46,14 +46,14 @@ CLAMP_MONTH_START = dt.date(2016, 6, 1)
 
 def _segment_avg(classed: DataFrame, time_point: int) -> DataFrame:
     return (
-        classed.withColumn("car_type", car_type_col())
-        .filter(F.col("car_type").isNotNull())
-        .groupBy("car_type", F.col("hour").alias("time_period"))
-        .agg(F.avg("speed").alias("avg_carspeed"))
-        .select(
-            F.lit(time_point).alias("time_point"),
+        classed.selectExpr("*", f"{CAR_TYPE_SQL} AS car_type")
+        .filter("car_type IS NOT NULL")
+        .groupBy("car_type", "hour")
+        .agg(F.expr("avg(speed) AS avg_carspeed"))
+        .selectExpr(
+            f"{int(time_point)} AS time_point",
             "car_type",
-            "time_period",
+            "hour AS time_period",
             "avg_carspeed",
         )
     )
@@ -86,9 +86,8 @@ def average_speed(
     # --- today branch (query month's data only, src/AverageSpeed.scala:31-34)
     today_src = start if mode == "parity" else end  # quirk §2.10.4
     today_obs = speed_data_today.filter(
-        (F.col("WZSJDayOfMonth") == today_src.day)
-        & (F.col("WZSMonthOfYear") == today_src.month)
-        & (F.col("WZSJYear") == today_src.year)
+        f"WZSJDayOfMonth = {today_src.day} AND WZSMonthOfYear = {today_src.month}"
+        f" AND WZSJYear = {today_src.year}"
     )
     # The reference's today interval-join uses only the query month's toll
     # file (src/AverageSpeed.scala:108).
@@ -103,9 +102,7 @@ def average_speed(
     hist_start = max(start, CLAMP_MONTH_START)
     start_ms = date_millis(hist_start, tz)
     end_ms = date_millis(end + dt.timedelta(days=1), tz)
-    hist_obs = speed_data.filter(
-        (F.col("WZSJMillis") >= start_ms) & (F.col("WZSJMillis") < end_ms)
-    )
+    hist_obs = speed_data.filter(f"WZSJMillis >= {start_ms} AND WZSJMillis < {end_ms}")
     classed = join_toll_class(
         join_stations(hist_obs, guids), fee_data, month_key=(mode == "parity")
     )

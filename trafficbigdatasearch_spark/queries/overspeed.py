@@ -37,9 +37,9 @@ from pyspark.sql import functions as F
 from trafficbigdatasearch_spark.queries._core import (
     months_in_range,
     next_month,
-    overspeed_threshold,
+    CAR_TYPE_SQL,
+    OVERSPEED_THRESHOLD_SQL,
     BBox,
-    car_type_col,
     date_millis,
     join_stations,
     join_toll_class,
@@ -59,7 +59,7 @@ def overspeed_count(
     mode: str = "parity",
 ) -> DataFrame:
     """``tz`` MUST match the Spark session timezone: range boundaries use
-    ``tz`` driver-side while the parity month key (``month_of_millis``) and
+    ``tz`` in Python while the parity month key (``join_toll_class``) and
     row-timestamp parsing use the SESSION zone — ``TrafficEngine`` pins both
     to the same zone; direct callers are responsible for the same alignment
     (SURVEY §2.10.7)."""
@@ -73,11 +73,13 @@ def overspeed_count(
         # end month's file, so the instant ``end+1d 00:00`` only counts when
         # it still falls inside the end month; records in the next month's
         # file are out of scope even at the exact boundary.
-        time_pred = F.col("WZSJMillis").between(start_ms, end_ms) & (
-            F.col("WZSJMillis") < date_millis(next_month(end_d), tz)
+        cutoff_ms = date_millis(next_month(end_d), tz)
+        time_pred = (
+            f"(WZSJMillis >= {start_ms} AND WZSJMillis <= {end_ms})"
+            f" AND WZSJMillis < {cutoff_ms}"
         )
     else:
-        time_pred = (F.col("WZSJMillis") >= start_ms) & (F.col("WZSJMillis") < end_ms)
+        time_pred = f"WZSJMillis >= {start_ms} AND WZSJMillis < {end_ms}"
 
     obs = speed_data.filter(time_pred)
     speed = join_stations(obs, station_guids(speed_base, bbox))
@@ -89,11 +91,10 @@ def overspeed_count(
         # (see module docstring).
         classed = classed.distinct()
 
-    threshold = overspeed_threshold()
     return (
-        classed.withColumn("car_type", car_type_col())
-        .filter(F.col("car_type").isNotNull() & (F.col("speed") > threshold))
-        .groupBy("car_type", F.col("hour").alias("time_period"))
-        .agg(F.count("*").alias("speed_limit_num"))
-        .select("car_type", "time_period", "speed_limit_num")
+        classed.selectExpr("*", f"{CAR_TYPE_SQL} AS car_type")
+        .filter(f"car_type IS NOT NULL AND speed > {OVERSPEED_THRESHOLD_SQL}")
+        .groupBy("car_type", "hour")
+        .agg(F.expr("count(*) AS speed_limit_num"))
+        .withColumnRenamed("hour", "time_period")
     )

@@ -9,10 +9,9 @@ internal currency and serializes only at the facade boundary.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def to_json_rows(df: DataFrame) -> list[str]:
     """Row-per-JSON-string, computed JVM-side via ``to_json(struct(*))`` —
     the driver only receives the final strings (no Python-side encoding)."""
-    return [r[0] for r in df.select(F.to_json(F.struct(*df.columns))).collect()]
+    return [r[0] for r in df.selectExpr("to_json(struct(*))").collect()]
