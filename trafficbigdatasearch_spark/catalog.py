@@ -8,10 +8,12 @@ temp views are created only by the SQL facade when a caller wants ``spark.sql``.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import functions as F
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region",
@@ -28,14 +30,76 @@ TABLE_NAMES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: session confs that change the schema Spark infers from Parquet footers
+#: (``ParquetToSparkSchemaConverter``'s inputs, plus ``mergeSchema`` for
+#: directory tables); their values are part of every memo key
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+#: per session: memo key -> the ``StructType`` Spark inferred for that key
+_schemas: weakref.WeakKeyDictionary[SparkSession, dict[tuple, StructType]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _file_version(path: str) -> tuple:
+    """``(size, mtime_ns)`` of a file, or the sorted ``(relpath, size,
+    mtime_ns)`` of every file under a directory table.  A driver-side
+    listing: it runs no Spark job."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_size, st.st_mtime_ns)
+    files = []
+    for root, _, names in os.walk(path):
+        for n in names:
+            full = os.path.join(root, n)
+            st = os.stat(full)
+            files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def file_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the Parquet table at ``path`` (one file,
+    or a directory of part files), inferred once per session per file
+    version.
+
+    The memo key is the absolute path, the file version (size and mtime of
+    the file, or of every file under the directory) and the session's values
+    of :data:`_INFERENCE_CONFS`, so a rewritten or extended table, or a
+    flipped inference conf, infers again; a hit runs no Spark job.  Only the
+    ``StructType`` is kept, never a DataFrame: every caller builds its own
+    relation, with its own attribute IDs."""
+    path = os.path.abspath(path)
+    key = (path, _file_version(path)) + tuple(
+        spark.conf.get(c) for c in _INFERENCE_CONFS
+    )
+    memo = _schemas.setdefault(spark, {})
+    schema = memo.get(key)
+    if schema is None:
+        schema = memo[key] = spark.read.parquet(path).schema
+    return schema
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan of one testdata table (vectorized reader, pushdown on).
 
-    ``events.ts`` is TIMESTAMP(NANOS) in the file; with
-    ``spark.sql.legacy.parquet.nanosAsLong`` it surfaces as int64 and is
-    converted here to a microsecond timestamp (truncating, exactly like
-    DuckDB's native read of the same file).
+    The table's schema is inferred once per session per file version
+    (:func:`file_schema`); later calls read with that schema and launch no
+    Spark job.  Each call returns a new DataFrame, so a table loaded twice
+    (a self-join) gets distinct attribute IDs on each side.
+
+    ``events.ts`` is ``timestamp[us]`` with no UTC flag in the testdata
+    files, which Spark reads as ``timestamp_ntz``; it is cast to
+    ``timestamp`` below.  A TIMESTAMP(NANOS) file surfaces as int64 through
+    ``spark.sql.legacy.parquet.nanosAsLong`` and is converted here to a
+    microsecond timestamp (truncating, exactly like DuckDB's native read of
+    the same file).
 
     Both confs below are runtime-settable, so this works on any caller's
     session — including a vanilla ``SparkSession`` that never went through
@@ -63,7 +127,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 # older/newer Spark: fall through to the read, which throws
                 # its own PARQUET_TYPE_ILLEGAL if the conf truly mattered
                 pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(file_schema(spark, path)).parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -8,7 +8,7 @@ for the driver-window policy and ledger."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from trafficbigdatasearch_spark.catalog import load_table
+from trafficbigdatasearch_spark.catalog import file_schema, load_table
 from trafficbigdatasearch_spark.operators import (
     joins,
 )
@@ -527,7 +527,7 @@ def stream_dedup_q(spark, sf):
     import os
 
     load_table(spark, sf, "events")  # pins session tz/nanos confs
-    raw = spark.read.parquet(os.path.join(sf, "events.parquet"))
+    schema = file_schema(spark, os.path.join(sf, "events.parquet"))
     d = _scratch("stream_dedup_src", sf)
     src_file = os.path.realpath(os.path.join(sf, "events.parquet"))
     for name in ("replay_a.parquet", "replay_b.parquet"):
@@ -535,7 +535,7 @@ def stream_dedup_q(spark, sf):
         if not os.path.lexists(link):
             os.symlink(src_file, link)
     src = (
-        spark.readStream.schema(raw.schema)
+        spark.readStream.schema(schema)
         # enforce the single-micro-batch assumption: both replica files
         # (each a symlink to one parquet file) must land in batch 0, else
         # the watermark could classify the replayed copy as late

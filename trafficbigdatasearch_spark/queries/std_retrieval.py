@@ -8,7 +8,7 @@ for the driver-window policy and ledger."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from trafficbigdatasearch_spark.catalog import load_table
+from trafficbigdatasearch_spark.catalog import file_schema, load_table
 from trafficbigdatasearch_spark.functions import text as T
 from trafficbigdatasearch_spark.operators import (
     dedup,
@@ -1277,14 +1277,14 @@ def _stream_documents_source(spark, sf):
     _stream_events_source arrangement, no ts normalization needed)."""
     import os
 
-    raw = spark.read.parquet(os.path.join(sf, "documents.parquet"))
+    schema = file_schema(spark, os.path.join(sf, "documents.parquet"))
     d = _scratch("stream_documents", sf)
     link = os.path.join(d, "documents.parquet")
     if not os.path.lexists(link):
         os.symlink(
             os.path.realpath(os.path.join(sf, "documents.parquet")), link
         )
-    return spark.readStream.schema(raw.schema).parquet(d)
+    return spark.readStream.schema(schema).parquet(d)
 
 
 def _stream_embeddings_source(spark, sf):
@@ -1292,14 +1292,14 @@ def _stream_embeddings_source(spark, sf):
     _stream_documents_source arrangement)."""
     import os
 
-    raw = spark.read.parquet(os.path.join(sf, "embeddings.parquet"))
+    schema = file_schema(spark, os.path.join(sf, "embeddings.parquet"))
     d = _scratch("stream_embeddings", sf)
     link = os.path.join(d, "embeddings.parquet")
     if not os.path.lexists(link):
         os.symlink(
             os.path.realpath(os.path.join(sf, "embeddings.parquet")), link
         )
-    return spark.readStream.schema(raw.schema).parquet(d)
+    return spark.readStream.schema(schema).parquet(d)
 
 
 @register("stream_lm_gate", _LM_FILTER_ORACLE)

@@ -8,7 +8,7 @@ for the driver-window policy and ledger."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from trafficbigdatasearch_spark.catalog import load_table
+from trafficbigdatasearch_spark.catalog import file_schema, load_table
 from trafficbigdatasearch_spark.functions import text as T
 from trafficbigdatasearch_spark.functions import vectors as V
 from trafficbigdatasearch_spark.operators import (
@@ -1331,12 +1331,12 @@ def _stream_events_source(spark, sf):
     # load_table pins the nanos/UTC confs on the caller's session (result
     # unused — the streaming read below needs those confs in place)
     load_table(spark, sf, "events")
-    raw = spark.read.parquet(os.path.join(sf, "events.parquet"))
+    schema = file_schema(spark, os.path.join(sf, "events.parquet"))
     d = _scratch("stream_events", sf)
     link = os.path.join(d, "events.parquet")
     if not os.path.lexists(link):
         os.symlink(os.path.realpath(os.path.join(sf, "events.parquet")), link)
-    src = spark.readStream.schema(raw.schema).parquet(d)
+    src = spark.readStream.schema(schema).parquet(d)
     _ts_type = dict(src.dtypes).get("ts")
     if _ts_type == "bigint":
         src = src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

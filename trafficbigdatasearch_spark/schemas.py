@@ -1,4 +1,6 @@
-"""Explicit schemas for every table the engine reads (SURVEY.md §1.2).
+"""Explicit schemas for the traffic tables and the event stream (SURVEY.md
+§1.2).  The driver's Parquet testdata tables have none here: ``catalog``
+reads them with the schema Spark infers from the files.
 
 The reference declares schemas as Scala case classes
 (src/AccidentStatistics.scala:12-33, src/OverSpeedCount.scala:12-14,
@@ -14,9 +16,7 @@ Python, so Catalyst sees through the whole cleaning stage.
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -138,56 +138,12 @@ FEE_DATA = _struct(
 )
 
 
-# --- B. Driver testdata (TPC-H-ish; TESTDATA.md / FIXTURES.md §B) ------------
+# --- B. Event stream contract ------------------------------------------------
 
-REGION = _struct(("r_regionkey", IntegerType()), ("r_name", StringType()))
-NATION = _struct(
-    ("n_nationkey", IntegerType()),
-    ("n_name", StringType()),
-    ("n_regionkey", IntegerType()),
-)
-CUSTOMER = _struct(
-    ("c_custkey", LongType()),
-    ("c_name", StringType()),
-    ("c_nationkey", IntegerType()),
-    ("c_acctbal", DoubleType()),
-    ("c_mktsegment", StringType()),
-)
-SUPPLIER = _struct(
-    ("s_suppkey", LongType()),
-    ("s_name", StringType()),
-    ("s_nationkey", IntegerType()),
-    ("s_acctbal", DoubleType()),
-)
-PART = _struct(
-    ("p_partkey", LongType()),
-    ("p_name", StringType()),
-    ("p_brand", StringType()),
-    ("p_type", StringType()),
-    ("p_size", IntegerType()),
-    ("p_retailprice", DoubleType()),
-)
-ORDERS = _struct(
-    ("o_orderkey", LongType()),
-    ("o_custkey", LongType()),
-    ("o_orderstatus", StringType()),
-    ("o_totalprice", DoubleType()),
-    ("o_orderdate", TimestampType()),
-    ("o_orderpriority", StringType()),
-)
-LINEITEM = _struct(
-    ("l_orderkey", LongType()),
-    ("l_partkey", LongType()),
-    ("l_suppkey", LongType()),
-    ("l_linenumber", IntegerType()),
-    ("l_quantity", DoubleType()),
-    ("l_extendedprice", DoubleType()),
-    ("l_discount", DoubleType()),
-    ("l_tax", DoubleType()),
-    ("l_returnflag", StringType()),
-    ("l_linestatus", StringType()),
-    ("l_shipdate", TimestampType()),
-)
+#: The schema ``streaming/events.read_event_stream`` imposes on an event
+#: stream.  It is the stream contract, not the testdata ``events.parquet``
+#: file schema: batch and registry code read the testdata tables with the
+#: schema Spark infers from the files (``catalog.file_schema``).
 EVENTS = _struct(
     ("event_id", LongType()),
     ("ts", TimestampType()),
@@ -196,28 +152,3 @@ EVENTS = _struct(
     ("value", DoubleType()),
     ("props", StringType()),
 )
-DOCUMENTS = _struct(
-    ("doc_id", LongType()),
-    ("text", StringType()),
-    ("lang", StringType()),
-    ("source", StringType()),
-    ("n_chars", LongType()),
-)
-EMBEDDINGS = _struct(
-    ("vec_id", LongType()),
-    ("embedding", ArrayType(FloatType())),
-    ("label", IntegerType()),
-)
-
-TESTDATA_TABLES = {
-    "region": REGION,
-    "nation": NATION,
-    "customer": CUSTOMER,
-    "supplier": SUPPLIER,
-    "part": PART,
-    "orders": ORDERS,
-    "lineitem": LINEITEM,
-    "events": EVENTS,
-    "documents": DOCUMENTS,
-    "embeddings": EMBEDDINGS,
-}
