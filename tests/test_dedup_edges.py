@@ -256,12 +256,55 @@ def test_skew_guard_runs_before_collect(spark):
     ).count() == n_pairs
 
 
-def test_simhash_pairs_rejects_bad_banding(spark):
-    docs = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
-    with pytest.raises(ValueError, match="divisible"):
-        dedup.simhash_pairs(docs, n_bits=16, band_bits=5)
-    with pytest.raises(ValueError, match="pigeonhole"):
-        dedup.simhash_pairs(docs, n_bits=16, band_bits=8, max_hamming=3)
+@pytest.mark.parametrize("entry", ["hamming_pairs", "hamming_pairs_incremental"])
+@pytest.mark.parametrize(
+    "kw, match",
+    [
+        (dict(n_bits=16, band_bits=5), "divisible"),
+        (dict(n_bits=16, band_bits=8, max_hamming=3), "pigeonhole"),
+        (dict(n_bits=0), "n_bits"),
+        (dict(n_bits=65, band_bits=5), "n_bits"),
+        (dict(n_bits=64, band_bits=64, max_hamming=0), "band_bits"),
+    ],
+    ids=["divisible", "pigeonhole", "n_bits_0", "n_bits_65", "band_bits_64"],
+)
+def test_hamming_banding_rejects_bad_params(entry, kw, match):
+    """Both Hamming entry points share one banding check, run before any
+    Spark call: the fingerprint frames are never touched (None stands in).
+    A 64-bit band would need a mask no BIGINT literal holds."""
+    fps = [None] * (1 if entry == "hamming_pairs" else 2)
+    with pytest.raises(ValueError, match=match):
+        getattr(dedup, entry)(*fps, **kw)
+
+
+@pytest.mark.parametrize("n_bits", [0, 64])
+def test_simhash_rejects_bits_outside_bigint(n_bits):
+    """Bit 63 of a simhash would need a ``1 << 63`` BIGINT literal (it used
+    to fail inside py4j with NumberFormatException); both builders refuse
+    before any Spark call."""
+    for build in (dedup.simhash_fingerprints, dedup.simhash_pairs):
+        with pytest.raises(ValueError, match="n_bits"):
+            build(None, n_bits=n_bits)
+
+
+def test_hamming_pairs_64_bit_fingerprints(spark):
+    """64-bit fingerprints (phash_decoded's default width) band correctly,
+    sign bit included: the mask drops the arithmetic shift's sign
+    extension, and bit_count counts all 64 bits."""
+    def signed(x):
+        return x - (1 << 64) if x >= 1 << 63 else x
+
+    raw = [0x0123456789ABCDEF, 0x0123456789ABCDEF ^ 0b11, 0xF0F0F0F0F0F0F0F0,
+           0xF0F0F0F0F0F0F0F0 ^ (1 << 63), 0x5555555555555555]
+    fps = spark.createDataFrame(
+        [(i, signed(v)) for i, v in enumerate(raw)], "id: bigint, simhash: bigint"
+    )
+    kw = dict(n_bits=64, band_bits=16, max_hamming=3)
+    assert sorted(map(tuple, dedup.hamming_pairs(fps, **kw).collect())) == [
+        (0, 1, 2), (2, 3, 1)
+    ]
+    got = dedup.hamming_pairs_incremental(fps.filter("id >= 2"), fps.filter("id = 3"), **kw)
+    assert sorted(map(tuple, got.collect())) == [(3, 2, 1), (3, 3, 0)]
 
 
 def test_incremental_dedup_verdicts(spark):
@@ -620,17 +663,6 @@ def test_hamming_incremental_matches_bruteforce(spark):
     assert (100, corpus[7][0], 0) in got and (101, corpus[8][0], 2) in got
     # cross pairs only: no new x new, no corpus x corpus ids mixed up
     assert all(ni >= 100 and ci < 100 for ni, ci, _ in got)
-
-
-def test_hamming_incremental_pigeonhole_guard(spark):
-    import pytest as _pytest
-
-    from trafficbigdatasearch_spark.operators import dedup
-
-    df = spark.createDataFrame([(1, 3)], "id: bigint, simhash: bigint")
-    with _pytest.raises(ValueError, match="pigeonhole"):
-        dedup.hamming_pairs_incremental(df, df, n_bits=16, band_bits=8,
-                                        max_hamming=3)
 
 
 def test_syndication_matrix_hand_case(spark):

@@ -4,7 +4,7 @@ On a warm session (every testdata table's schema already inferred once, see
 ``catalog.file_schema``, and every shared scratch layout written) a builder
 only composes a plan; the plan runs when the caller forces it.  The rows
 listed in ``EAGER_AT_BUILD`` run Spark work inside the builder on purpose
-(fixpoint loops, trainers, index builds, count/collect probes); they are
+(fixpoint loops, trainers, count/collect probes, checkpoints); they are
 skipped, which also keeps this test short.
 """
 
@@ -19,7 +19,6 @@ _GRAPH_N = "counts the customer nodes and checkpoints the canonical edge list"
 _BPE = "BPE merge training: one collect per merge round"
 _PQ_CODEBOOK = "collects the PQ codebook for the GEMM encode kernel"
 _IVF_PROBE = "isEmpty probe on the IVF coarse centroids"
-_INDEX = "reads back the index it built (schema inference on the index files)"
 _CHECKPOINT = "localCheckpoint under AQE runs the checkpointed plan's shuffle stages"
 _SIDECAR = "reads its min/max sidecar and probes it with count/collect"
 _STREAM = "runs its stream to completion and reads the output back"
@@ -65,16 +64,10 @@ EAGER_AT_BUILD = {
     "sim_ivf_topk": _IVF_PROBE,
     "eval_ivf_recall": _IVF_PROBE,
     "dedup_semantic_incremental": _IVF_PROBE,
-    # index builds and persisted layouts
-    "sim_ivf_indexed": _INDEX,
-    "sim_ivf_append": _INDEX,
-    "text_phrase_indexed": _INDEX,
-    "text_bm25_indexed": _INDEX,
-    "text_bm25_append": _INDEX,
+    # persisted layouts
     "s_minmax_skipping": _SIDECAR,
     "s_zorder_skipping": _SIDECAR,
     "stream_partial_maintenance": _STREAM,
-    "stream_merge_upsert": "reads back the changeset and the merged snapshot it wrote",
     # checkpointed stages and count probes
     "text_dup_spans": _CHECKPOINT,
     "text_boilerplate_spans": _CHECKPOINT,
@@ -101,13 +94,20 @@ EAGER_AT_BUILD = {
 #: rows whose first build in a process writes a scratch layout that later
 #: builds, theirs and other rows', only read (the bucketed events table,
 #: the appended OHLC table, the bucketed user stats, the bloom bitmap, the
-#: ORC copy)
+#: ORC copy, the IVF and text indexes, the merge-upsert snapshot and
+#: changeset); a later build reads them back through ``catalog.file_schema``
 FIRST_BUILD = (
     "ts_gapfill_bucketed",
     "ts_ohlc_bucketed_append",
     "j_user_baseline_bucketed",
     "j_bloom_prefilter",
     "s_orc_roundtrip",
+    "sim_ivf_indexed",
+    "sim_ivf_append",
+    "text_phrase_indexed",
+    "text_bm25_indexed",
+    "text_bm25_append",
+    "stream_merge_upsert",
 )
 
 

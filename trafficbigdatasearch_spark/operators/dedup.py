@@ -18,6 +18,23 @@ partition-parallel:
 At 100 TB: every operator here is (explode -> hash-partitioned shuffle ->
 aggregate); skew on hot shingles is bounded by dropping top-frequency
 shingles (``max_shingle_freq``), the standard trick for web-scale dedup.
+
+Shared building blocks, one home each:
+
+- ``_posting_lists``: the window-count skew guard and the sorted
+  ``collect_list`` per key (Jaccard, token cosine, MinHash LSH, Hamming).
+- ``_pairs``: every ordered member pair of a posting list, two explodes and
+  an ``a < b`` filter (the same four plus the prefix-filtered Jaccard).
+- ``_band_buckets``: MinHash band-bucket assembly and the ``k % bands``
+  check (batch and row-wise signatures).
+- ``_bit_bands``: bit-fingerprint banding and its width / divisibility /
+  pigeonhole checks (both Hamming operators).
+- ``_jaccard_at_least``, ``_positioned_shingles``, ``_merge_doc_intervals``:
+  the Jaccard threshold filter and the two span finders' input and merge.
+
+Per-document shingle / hash stages start from ``P.spread(docs, id)``: an
+explicit-width exchange, so a low-split source does not serialize them onto
+few cores (see partitioning.spread).
 """
 
 from __future__ import annotations
@@ -83,28 +100,69 @@ def dedup_exact(
     return docs.join(keep, id_col, "left_semi")
 
 
-def _spread(docs: DataFrame, id_col: str) -> DataFrame:
-    """Repartition by id before CPU-heavy per-document work.  The input is a
-    narrow (id, text) projection, so the exchange is cheap; without it a
-    low-split source (one parquet row group locally; a coalesced scan on a
-    cluster) serializes the expensive shingle/hash stage onto few cores.
-
-    The partition count is EXPLICIT (the session's shuffle width): with a
-    bare ``repartition(col)`` AQE re-coalesces the exchange by BYTES, and a
-    ~1 MB (id, text) frame collapses back to one partition — the r13 stage
-    ledger measured every signature stage of the dedup family running n=1
-    for exactly this reason (see partitioning.spread)."""
-    return P.spread(docs, id_col)
-
-
 def _shingle_exploded(
-    docs: DataFrame, id_col: str, text_col: str, n: int, distinct: bool = True
+    docs: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
-    sh = T.word_shingles(F.col(text_col), n)
-    if distinct:
-        sh = F.array_distinct(sh)
-    docs = _spread(docs.select(id_col, text_col), id_col)
+    """(_id, shingle): each document's distinct word n-grams."""
+    sh = F.array_distinct(T.word_shingles(F.col(text_col), n))
+    docs = P.spread(docs.select(id_col, text_col), id_col)
     return docs.select(F.col(id_col).alias("_id"), F.explode(sh).alias("shingle"))
+
+
+def _posting_lists(
+    rows: DataFrame, key: list[str], member, lst: str, cap: int | None
+) -> DataFrame:
+    """(key..., ``lst``): the sorted ``member`` values of each ``key`` value
+    held by more than one row and, when ``cap`` is set, by at most ``cap``
+    rows — the skew guard that bounds a hot key's O(L²) pair fan-out.
+
+    ``rows`` arrives hash-partitioned on ``key`` (a ``P.spread``), and the
+    guard is a window count over that one exchange, applied BEFORE any
+    ``collect_list``: a degenerate key in 10⁷ rows streams through
+    WindowExec's spillable buffer and is dropped, never built as one giant
+    aggregation row (round-1 judge finding: guard-after-collect OOMs the
+    executor before the size filter can drop the row).  A separate
+    count-aggregate pre-pass would also bound memory, but its map-side
+    partial aggregate sits above a DIFFERENT exchange, so the upstream
+    explode / signature pipeline runs twice — measured +50-70 % on the
+    bench."""
+    guard = F.col("_n") > 1
+    if cap is not None:
+        guard = guard & (F.col("_n") <= cap)
+    return (
+        rows.withColumn("_n", F.count("*").over(Window.partitionBy(*key)))
+        .filter(guard)
+        .groupBy(*key)
+        .agg(F.sort_array(F.collect_list(member)).alias(lst))
+    )
+
+
+def _pairs(
+    posting: DataFrame, lst: str, a: str, b: str, by: str | None = None
+) -> DataFrame:
+    """(``a``, ``b``): every pair of one posting list's members with ``a``
+    before ``b`` (compared on their ``by`` field for struct members).  Two
+    generator explodes and a filter ahead of the caller's closing
+    exchange, so the shuffle carries each co-occurrence exactly once;
+    codegen-friendly (no interpreted lambda)."""
+    ids = F.col(lst)
+    ka, kb = (a, b) if by is None else (f"{a}.{by}", f"{b}.{by}")
+    return (
+        posting.select(F.explode(ids).alias(a), lst)
+        .select(a, F.explode(ids).alias(b))
+        .filter(F.col(ka) < F.col(kb))
+    )
+
+
+def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, shared, size_a, size_b) rows of ``pairs`` whose Jaccard
+    ``shared / (size_a + size_b - shared)`` is at least ``threshold``."""
+    jaccard = F.col("shared").cast("double") / (
+        F.col("size_a") + F.col("size_b") - F.col("shared")
+    )
+    return pairs.filter(jaccard >= threshold).select(
+        "id_a", "id_b", "shared", "size_a", "size_b"
+    )
 
 
 def ngram_jaccard_pairs(
@@ -140,42 +198,20 @@ def ngram_jaccard_pairs(
     shingle)`` as the frequency guard -> filter -> posting lists -> pair
     generation via two generator explodes (each co-occurrence emitted
     exactly once, O(L²) bounded by ``max_shingle_freq``) -> exact rescore of
-    candidates.  The guard runs BEFORE any ``collect_list``: a degenerate
-    stopword shingle in 10⁷ docs streams through WindowExec's spillable
-    buffer and is filtered out — its posting list is never built as one
-    giant aggregation row (round-1 judge finding: guard-after-collect OOMs
-    the executor before the size filter can drop the row; a separate
-    count-aggregate pre-pass fixes that but its map-side partial agg sits
-    above a DIFFERENT exchange, so the explode pipeline runs twice — a
-    measured +50-70% on the bench.  The window formulation keeps the single
-    shared exchange AND the bounded-memory guarantee).
+    candidates.  The guard runs BEFORE any ``collect_list``
+    (:func:`_posting_lists`), so the plan keeps the single shared exchange
+    AND the bounded-memory guarantee.
     """
     ex = _shingle_exploded(docs, id_col, text_col, n)
     # THE shared exchange: sizes, the guard window and the posting agg all
     # hang off this one shuffle of the exploded rows (explicit width — the
-    # downstream window/agg stages are hash-CPU-bound, see _spread)
+    # downstream window/agg stages are hash-CPU-bound)
     exsh = P.spread(ex, "shingle")
     # true distinct-shingle count per doc — one row per (doc, shingle)
     sizes = exsh.groupBy("_id").agg(F.count("*").alias("sz"))
-    df_w = F.count("*").over(Window.partitionBy("shingle"))
-    guard = (F.col("_df") > 1)
-    if max_shingle_freq is not None:
-        guard = guard & (F.col("_df") <= max_shingle_freq)
-    posting = (
-        exsh.withColumn("_df", df_w)
-        .filter(guard)
-        .groupBy("shingle")
-        .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
-    )
-    # all ordered pairs (ids[i], ids[j]) with i < j: two generator explodes +
-    # a pre-shuffle filter.  Codegen-friendly (no interpreted lambda); the
-    # id_a < id_b filter runs before the exchange so the shuffle carries each
-    # co-occurrence exactly once.
-    ids = F.col("ids")
+    posting = _posting_lists(exsh, ["shingle"], "_id", "ids", max_shingle_freq)
     shared = (
-        posting.select(F.explode(ids).alias("id_a"), "ids")
-        .select("id_a", F.explode(ids).alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
+        _pairs(posting, "ids", "id_a", "id_b")
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("shared"))
     )
@@ -193,22 +229,15 @@ def ngram_jaccard_pairs(
             .groupBy("id_a", "id_b")
             .agg(F.count("*").alias("shared"))
         )
-    out = (
+    return _jaccard_at_least(
         shared.join(sizes.withColumnRenamed("_id", "id_a").withColumnRenamed("sz", "size_a"), "id_a")
-        .join(sizes.withColumnRenamed("_id", "id_b").withColumnRenamed("sz", "size_b"), "id_b")
-        .filter(
-            F.col("shared").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("shared"))
-            >= threshold
-        )
+        .join(sizes.withColumnRenamed("_id", "id_b").withColumnRenamed("sz", "size_b"), "id_b"),
+        threshold,
     )
-    return out.select("id_a", "id_b", "shared", "size_a", "size_b")
 
 
 def token_cosine_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: tuple[int, int] = (4, 5),
     max_term_df: int | None = 1000,
 ) -> DataFrame:
@@ -258,36 +287,29 @@ def token_cosine_pairs(
         raise ValueError(
             f"threshold denominator must be <= 100 (decimal-38 bound), got {q}"
         )
+    # tf feeds norms + candidates + verify; the checkpoint computes it once.
+    # Not free at build: under AQE (the engine default) even eager=False
+    # runs the checkpointed plan's shuffle stage (the tf groupBy) at this
+    # call (tests/test_registry_build_jobs.py, _CHECKPOINT)
     tf = (
-        docs.select(F.col(id_col).alias("_id"), F.explode(T.tokens(F.col(text_col))).alias("term"))
+        docs.select(F.col("doc_id").alias("_id"), F.explode(T.tokens(F.col("text"))).alias("term"))
         .filter(F.col("term") != "")
         .withColumn("term", F.lower(F.col("term")))
         .groupBy("_id", "term")
         .agg(F.count("*").cast("bigint").alias("tf"))
-    ).localCheckpoint(eager=False)  # feeds norms + candidates + verify
+    ).localCheckpoint(eager=False)
     norms = tf.groupBy("_id").agg(
         F.sum(F.col("tf") * F.col("tf")).cast("bigint").alias("nrm")
     )
-    tfsh = P.spread(tf, "term")
-    guard = F.count("*").over(Window.partitionBy("term"))
-    hot_ok = (F.col("_df") > 1) if max_term_df is None else (
-        (F.col("_df") > 1) & (F.col("_df") <= max_term_df)
+    posting = _posting_lists(
+        P.spread(tf, "term"),
+        ["term"],
+        F.struct(F.col("_id").alias("i"), F.col("tf").alias("w")),
+        "ps",
+        max_term_df,
     )
-    posting = (
-        tfsh.withColumn("_df", guard)
-        .filter(hot_ok)
-        .groupBy("term")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("_id").alias("i"), F.col("tf").alias("w")))
-            ).alias("ps")
-        )
-    )
-    ps = F.col("ps")
     cand = (
-        posting.select(F.explode(ps).alias("a"), "ps")
-        .select("a", F.explode(ps).alias("b"))
-        .filter(F.col("a.i") < F.col("b.i"))
+        _pairs(posting, "ps", "a", "b", by="i")
         .groupBy(F.col("a.i").alias("id_a"), F.col("b.i").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("_ncommon"))
         .select("id_a", "id_b")
@@ -349,9 +371,12 @@ def _rarity_prefix_rows(ex, threshold: float):
     # Both intermediates are multi-consumer: exsh feeds doc_sets + the
     # rarity ranking, doc_sets feeds sizes + both verify joins — without
     # materialization Spark recomputes the tokenize/shingle explode once
-    # per branch (measured: 4 document scans, 0 reused exchanges).  Lazy
+    # per branch (measured: 4 document scans, 0 reused exchanges).
     # localCheckpoints pin each to ONE computation (the recsys/graph
-    # pattern).  Measured at sf0.1 (idle host, warm min-of-3): plain
+    # pattern).  They are not lazy here: under AQE (the engine default)
+    # eager=False still runs each checkpointed plan's shuffle stages (the
+    # shingle spread, then the doc_sets groupBy) at the call, inside the
+    # builder.  Measured at sf0.1 (idle host, warm min-of-3): plain
     # 5.21 s, both-checkpointed 5.31 s, doc_sets-only 7.50 s — parity at
     # toy scale, and at deployment scale one explode + an executor-local
     # sequential write beats four source scans + four tokenize passes.
@@ -377,8 +402,6 @@ def _rarity_prefix_rows(ex, threshold: float):
 
 def ngram_jaccard_pairs_prefix(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
@@ -405,20 +428,14 @@ def ngram_jaccard_pairs_prefix(
     price of losslessness; both end in the same verify/filter, so outputs
     are comparable row-for-row (pinned in tests/test_dedup_edges.py).
     Output schema identical to :func:`ngram_jaccard_pairs`."""
-    ex = _shingle_exploded(docs, id_col, text_col, n)
+    ex = _shingle_exploded(docs, "doc_id", "text", n)
     pre, doc_sets = _rarity_prefix_rows(ex, threshold)
     posting = (
         pre.filter(F.col("_df") > 1)
         .groupBy("shingle")
         .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
     )
-    ids = F.col("ids")
-    cand = (
-        posting.select(F.explode(ids).alias("id_a"), "ids")
-        .select("id_a", F.explode(ids).alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
+    cand = _pairs(posting, "ids", "id_a", "id_b").distinct()
     # Verify via ROW-LOCAL set intersection: each candidate joins its two
     # docs' sorted shingle arrays and counts the overlap in one
     # array_intersect — two hash joins carrying |candidates| rows, no
@@ -433,44 +450,60 @@ def ngram_jaccard_pairs_prefix(
     # plan's hottest CPU — runs on one core (measured 4.0 s single-task at
     # sf0.1).  Explicit spreads on each join key keep the same two
     # exchanges the joins already pay, minus the coalesce.
-    out = (
-        P.spread(cand, "id_a").join(
+    out = cand
+    for side in ("a", "b"):
+        out = P.spread(out, f"id_{side}").join(
             doc_sets.select(
-                F.col("_id").alias("id_a"), F.col("_sh").alias("_sha")
+                F.col("_id").alias(f"id_{side}"), F.col("_sh").alias(f"_sh{side}")
             ),
-            "id_a",
+            f"id_{side}",
         )
+    out = out.select(
+        "id_a",
+        "id_b",
+        F.size(F.array_intersect("_sha", "_shb")).cast("bigint").alias("shared"),
+        F.size("_sha").cast("bigint").alias("size_a"),
+        F.size("_shb").cast("bigint").alias("size_b"),
     )
-    out = (
-        P.spread(out, "id_b")
-        .join(
-            doc_sets.select(
-                F.col("_id").alias("id_b"), F.col("_sh").alias("_shb")
-            ),
-            "id_b",
-        )
+    return _jaccard_at_least(out, threshold)
+
+
+def _positioned_shingles(
+    docs: DataFrame, k: int, group_col: str | None = None
+) -> DataFrame:
+    """([_g,] _id, start, shingle): every k-token window of each document
+    with its 0-based token position, optionally tagged with the document's
+    ``group_col`` value as ``_g`` — the frame both span finders read twice
+    (hot-window frequencies, then the join back).
+
+    Catalyst plans no ReusedExchange across those two consumers (different
+    partitionings reach the two sinks), so without a checkpoint the
+    tokenize + shingle + posexplode re-evaluates per consumer; one
+    localCheckpoint computes it once — measured 4.31 -> 2.61 s (1.65x) at
+    sf0.1 (SCALING.md r12).  At 100 TB the materialization is the footprint
+    the consumers' shuffles already pay, bought once instead of
+    recomputing the CPU-heavy tokenization twice.  Under AQE (the engine
+    default) ``eager=False`` still runs the checkpointed plan's shuffle
+    stage, when it has one, at the call: the conditional spread below
+    (partitioning.ensure_compute_width) adds one on a low-split input,
+    since the checkpoint INHERITS the input partitioning and would
+    otherwise serialize the tokenize and every consumer onto one core."""
+    grp = [] if group_col is None else [group_col]
+    return (
+        P.ensure_compute_width(docs.select(*grp, "doc_id", "text"), "doc_id")
         .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("_sha", "_shb"))
-            .cast("bigint")
-            .alias("shared"),
-            F.size("_sha").cast("bigint").alias("size_a"),
-            F.size("_shb").cast("bigint").alias("size_b"),
+            *[F.col(c).alias("_g") for c in grp],
+            F.col("doc_id").alias("_id"),
+            F.posexplode(T.word_shingles(F.col("text"), k)).alias(
+                "start", "shingle"
+            ),
         )
-        .filter(
-            F.col("shared").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("shared"))
-            >= threshold
-        )
+        .localCheckpoint(eager=False)
     )
-    return out.select("id_a", "id_b", "shared", "size_a", "size_b")
 
 
 def duplicated_spans(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 8,
     min_docs: int = 2,
 ) -> DataFrame:
@@ -494,28 +527,7 @@ def duplicated_spans(
     whitespace token stream :func:`strip_duplicated_spans` explodes
     (word_shingles lowercases internally, so shingling and stripping see
     identical tokens)."""
-    # TWO consumers read the exploded shingle frame (the frequency
-    # aggregate and the hot-window join-back), and Catalyst does not plan
-    # a ReusedExchange across them (different partitionings reach the
-    # two sinks), so without a checkpoint the tokenize+shingle+posexplode
-    # re-evaluates per consumer.  One lazy localCheckpoint materializes
-    # it once — measured 4.31 -> 2.61 s (1.65x) at sf0.1 (SCALING.md
-    # r12); at 100 TB the materialization is the same footprint the
-    # consumers' shuffles already pay, bought once instead of recomputing
-    # the CPU-heavy tokenization twice (production exact-substring dedup
-    # materializes this table for the same reason).
-    # conditional spread before the explode: the checkpoint INHERITS the
-    # input partitioning, so a 1-split local scan would serialize the
-    # tokenize AND every consumer of the checkpoint onto one core
-    # (identity at scale — partitioning.py)
-    sh = P.ensure_compute_width(
-        docs.select(id_col, text_col), id_col
-    ).select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(T.word_shingles(F.col(text_col), k)).alias(
-            "start", "shingle"
-        ),
-    ).localCheckpoint(eager=False)
+    sh = _positioned_shingles(docs, k)
     hot = (
         sh.groupBy("shingle")
         .agg(F.count_distinct("_id").alias("_d"))
@@ -525,16 +537,16 @@ def duplicated_spans(
     pos = sh.join(hot, "shingle").select(
         "_id", "start", (F.col("start") + k).alias("fin")
     )
-    return _merge_doc_intervals(pos, id_col)
+    return _merge_doc_intervals(pos)
 
 
-def _merge_doc_intervals(pos: DataFrame, id_col: str) -> DataFrame:
+def _merge_doc_intervals(pos: DataFrame) -> DataFrame:
     """Shared per-doc interval merge for the span finders: overlapping or
     touching (start, fin) windows in ``pos`` (columns: _id, start, fin)
     collapse into maximal spans with two windows over ONE (_id, start)
     sort — break-flag = start beyond the running max end of prior windows,
     group id = running sum of breaks, then min/max per group.  Output:
-    (id_col, span_start, span_end, n_tokens)."""
+    (doc_id, span_start, span_end, n_tokens)."""
     w_ord = Window.partitionBy("_id").orderBy("start", "fin")
     prev_max = F.max("fin").over(
         w_ord.rowsBetween(Window.unboundedPreceding, -1)
@@ -549,13 +561,13 @@ def _merge_doc_intervals(pos: DataFrame, id_col: str) -> DataFrame:
         ),
     )
     return (
-        grouped.groupBy(F.col("_id").alias(id_col), "_gid")
+        grouped.groupBy(F.col("_id").alias("doc_id"), "_gid")
         .agg(
             F.min("start").alias("span_start"),
             F.max("fin").alias("span_end"),
         )
         .select(
-            id_col,
+            "doc_id",
             "span_start",
             "span_end",
             (F.col("span_end") - F.col("span_start"))
@@ -568,8 +580,6 @@ def _merge_doc_intervals(pos: DataFrame, id_col: str) -> DataFrame:
 def boilerplate_spans(
     docs: DataFrame,
     group_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 8,
     min_df_pct: int = 25,
     min_docs: int = 2,
@@ -598,23 +608,12 @@ def boilerplate_spans(
         raise ValueError(
             f"min_df_pct must be in (0, 100], got {min_df_pct}"
         )
-    # same two-consumer shingle shape as duplicated_spans, same ruling:
-    # checkpoint once instead of re-exploding per consumer (SCALING.md r12);
-    # same conditional spread so the checkpoint is not single-partition
-    sh = P.ensure_compute_width(
-        docs.select(group_col, id_col, text_col), id_col
-    ).select(
-        F.col(group_col).alias("_g"),
-        F.col(id_col).alias("_id"),
-        F.posexplode(T.word_shingles(F.col(text_col), k)).alias(
-            "start", "shingle"
-        ),
-    ).localCheckpoint(eager=False)
+    sh = _positioned_shingles(docs, k, group_col)
     # count_distinct, not count(*): shingle document frequency counts
     # DISTINCT doc_ids, so the denominator must too — duplicate doc_id
     # rows would inflate _n_docs and under-flag boilerplate (ADVICE r8)
     n_docs = docs.groupBy(F.col(group_col).alias("_g")).agg(
-        F.count_distinct(id_col).alias("_n_docs")
+        F.count_distinct("doc_id").alias("_n_docs")
     )
     hot = (
         sh.groupBy("_g", "shingle")
@@ -629,15 +628,10 @@ def boilerplate_spans(
     pos = sh.join(hot, ["_g", "shingle"]).select(
         "_id", "start", (F.col("start") + k).alias("fin")
     )
-    return _merge_doc_intervals(pos, id_col)
+    return _merge_doc_intervals(pos)
 
 
-def strip_duplicated_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def strip_duplicated_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """Remove the :func:`duplicated_spans` regions from each document's
     token stream — the surgical-removal half of substring dedup: tokens
     whose position falls inside any of the doc's spans are dropped, the
@@ -650,25 +644,25 @@ def strip_duplicated_spans(
     boilerplate) comes back with empty text rather than silently vanishing
     from the corpus."""
     toks = P.ensure_compute_width(
-        docs.select(id_col, text_col), id_col
+        docs.select("doc_id", "text"), "doc_id"
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
-            T.tokens(F.lower(F.trim(F.col(text_col))))
+            T.tokens(F.lower(F.trim(F.col("text"))))
         ).alias("pos", "tok"),
     )
     marked = (
-        toks.join(spans, [id_col], "left")
+        toks.join(spans, ["doc_id"], "left")
         .withColumn(
             "_dup",
             (F.col("pos") >= F.col("span_start"))
             & (F.col("pos") < F.col("span_end")),
         )
-        .groupBy(id_col, "pos", "tok")
+        .groupBy("doc_id", "pos", "tok")
         .agg(F.max(F.coalesce(F.col("_dup"), F.lit(False))).alias("_in_dup"))
     )
     kept = marked.filter(~F.col("_in_dup"))
-    rebuilt = kept.groupBy(id_col).agg(
+    rebuilt = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(
@@ -680,9 +674,9 @@ def strip_duplicated_spans(
         ).alias("text")
     )
     return (
-        docs.select(id_col)
-        .join(rebuilt, id_col, "left")
-        .select(id_col, F.coalesce(F.col("text"), F.lit("")).alias("text"))
+        docs.select("doc_id")
+        .join(rebuilt, "doc_id", "left")
+        .select("doc_id", F.coalesce(F.col("text"), F.lit("")).alias("text"))
     )
 
 
@@ -697,7 +691,7 @@ def _minhash_wide(
     equals min() over the set, and the O(s²) per-document dedup dominated
     the scan profile."""
     ex = (
-        _spread(docs.select(id_col, text_col), id_col)
+        P.spread(docs.select(id_col, text_col), id_col)
         .select(
             F.col(id_col).alias("id"),
             F.explode(T.word_shingles(F.col(text_col), n)).alias("shingle"),
@@ -709,6 +703,37 @@ def _minhash_wide(
         for i, (va, vb) in enumerate(minhash_params(k))
     ]
     return ex.groupBy("id").agg(*aggs)
+
+
+def _wide_minhash(i: int):
+    """Minhash ``i`` of a :func:`_minhash_wide` row; a document with no
+    shingle hash gets the prime."""
+    return F.coalesce(F.col(f"_m{i}"), F.lit(MINHASH_PRIME))
+
+
+def _band_buckets(rows: DataFrame, ident, minhash, k: int, bands: int) -> DataFrame:
+    """(id, band, bucket): one row per ``rows`` row per band; ``ident`` is
+    the id column, aliased ``id``, and ``minhash(i)`` the expression of
+    minhash ``i``.  ``bucket`` is the '_'-joined minhash run of that band
+    in h_idx order (portable: SQL reproduces it with string_agg ORDER BY
+    h_idx)."""
+    if k % bands != 0:
+        raise ValueError(f"k={k} must be divisible by bands={bands}")
+    r = k // bands
+    per_band = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.concat_ws(
+                    "_", *[minhash(b * r + j).cast("string") for j in range(r)]
+                ).alias("bucket"),
+            )
+            for b in range(bands)
+        ]
+    )
+    return rows.select(ident, F.explode(per_band).alias("s")).select(
+        "id", F.col("s.band").alias("band"), F.col("s.bucket").alias("bucket")
+    )
 
 
 def minhash_signatures(
@@ -740,7 +765,7 @@ def minhash_signatures(
             *[
                 F.struct(
                     F.lit(i).alias("h_idx"),
-                    F.coalesce(F.col(f"_m{i}"), F.lit(MINHASH_PRIME)).alias("minhash"),
+                    _wide_minhash(i).alias("minhash"),
                 )
                 for i in range(k)
             ]
@@ -760,8 +785,7 @@ def minhash_band_buckets(
     n: int = 3,
 ) -> DataFrame:
     """The LSH index rows: (id, band, bucket), one row per document per
-    band; ``bucket`` is the '_'-joined minhash run of that band in h_idx
-    order (portable: SQL reproduces it with string_agg ORDER BY h_idx).
+    band (:func:`_band_buckets`).
 
     This IS the persistable corpus index for incremental dedup: write it
     out partitioned/bucketed on (band, bucket) once, and each new-batch
@@ -772,39 +796,12 @@ def minhash_band_buckets(
     The bucket string is a pure PROJECTION off the wide one-aggregate
     signature form — no second aggregation, no per-group sort; one shuffle
     total (the signature groupBy)."""
-    if k % bands != 0:
-        raise ValueError(f"k={k} must be divisible by bands={bands}")
-    r = k // bands
     wide = _minhash_wide(docs, id_col, text_col, k, n)
-    per_band = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "_",
-                    *[
-                        F.coalesce(
-                            F.col(f"_m{b * r + j}"), F.lit(MINHASH_PRIME)
-                        ).cast("string")
-                        for j in range(r)
-                    ],
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return wide.select("id", F.explode(per_band).alias("s")).select(
-        "id", F.col("s.band").alias("band"), F.col("s.bucket").alias("bucket")
-    )
+    return _band_buckets(wide, "id", _wide_minhash, k, bands)
 
 
 def minhash_band_buckets_rowwise(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 16,
-    bands: int = 4,
-    n: int = 3,
+    docs: DataFrame, k: int = 16, bands: int = 4
 ) -> DataFrame:
     """Row-local (id, band, bucket): the whole signature computed inside one
     row with array expressions — no explode, no groupBy, NO SHUFFLE and no
@@ -816,13 +813,9 @@ def minhash_band_buckets_rowwise(
     shingle construction per hash function here (the reason the batch path
     uses explode + one aggregate — measured 17× on a full corpus scan);
     per-micro-batch increments are small, so expression cost loses to the
-    shuffle+state it avoids."""
-    if k % bands != 0:
-        raise ValueError(f"k={k} must be divisible by bands={bands}")
-    r = k // bands
-    hv = F.transform(
-        T.word_shingles(F.col(text_col), n), lambda s: T.shingle_hash(s)
-    )
+    shuffle+state it avoids.  Word 3-gram shingles, as the batch form's
+    default."""
+    hv = F.transform(T.word_shingles(F.col("text"), 3), lambda s: T.shingle_hash(s))
     params = minhash_params(k)
 
     def _minh(i: int):
@@ -834,27 +827,12 @@ def minhash_band_buckets_rowwise(
             F.lit(MINHASH_PRIME),
         )
 
-    per_band = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "_", *[_minh(b * r + j).cast("string") for j in range(r)]
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return docs.select(F.col(id_col).alias("id"), F.explode(per_band).alias("s")).select(
-        "id", F.col("s.band").alias("band"), F.col("s.bucket").alias("bucket")
-    )
+    return _band_buckets(docs, F.col("doc_id").alias("id"), _minh, k, bands)
 
 
 def incremental_dedup(
     new_docs: DataFrame,
     corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 16,
     bands: int = 4,
     n: int = 3,
@@ -879,17 +857,17 @@ def incremental_dedup(
     tests/test_oracle_fuzz.py).
     """
     new_fp = new_docs.select(
-        F.col(id_col).alias("_nid"), T.fingerprint(F.col(text_col)).alias("_f")
+        F.col("doc_id").alias("_nid"), T.fingerprint(F.col("text")).alias("_f")
     )
-    corpus_fp = corpus.select(T.fingerprint(F.col(text_col)).alias("_f"))
+    corpus_fp = corpus.select(T.fingerprint(F.col("text")).alias("_f"))
     exact_hits = (
         corpus_fp.join(F.broadcast(new_fp), "_f").select("_nid").distinct()
     )
     if corpus_index is None:
-        corpus_index = minhash_band_buckets(corpus, id_col, text_col, k, bands, n)
-    new_buckets = minhash_band_buckets(
-        new_docs, id_col, text_col, k, bands, n
-    ).select(F.col("id").alias("_nid"), "band", "bucket")
+        corpus_index = minhash_band_buckets(corpus, k=k, bands=bands, n=n)
+    new_buckets = minhash_band_buckets(new_docs, k=k, bands=bands, n=n).select(
+        F.col("id").alias("_nid"), "band", "bucket"
+    )
     near_hits = (
         corpus_index.select("band", "bucket")
         .join(F.broadcast(new_buckets), ["band", "bucket"])
@@ -899,11 +877,11 @@ def incremental_dedup(
     # the hit sets are subsets of the increment — broadcast them so the
     # verdict assembly never sorts/shuffles either side
     return (
-        new_docs.select(F.col(id_col).alias("_nid"))
+        new_docs.select(F.col("doc_id").alias("_nid"))
         .join(F.broadcast(exact_hits.withColumn("_exact", F.lit(True))), "_nid", "left")
         .join(F.broadcast(near_hits.withColumn("_near", F.lit(True))), "_nid", "left")
         .select(
-            F.col("_nid").alias(id_col),
+            F.col("_nid").alias("doc_id"),
             F.when(F.col("_exact"), "exact")
             .when(F.col("_near"), "near")
             .otherwise("keep")
@@ -935,38 +913,19 @@ def minhash_lsh_pairs(
 
     ``max_bucket_size`` drops degenerate buckets (e.g. a whole corpus of
     empty documents sharing one signature) whose O(L²) pair fan-out would
-    land on a single task — the skew guard; a bucket that large is noise,
-    not near-duplication signal.
+    land on a single task — the skew guard (:func:`_posting_lists`, run
+    before any ``collect_list`` on the one bucket-key exchange); a bucket
+    that large is noise, not near-duplication signal.
     """
     banded = minhash_band_buckets(docs, id_col, text_col, k, bands, n)
-    # guard BEFORE collect_list, without recomputing the signature pipeline:
-    # one exchange on the bucket key, a window count as the size guard
-    # (degenerate buckets stream through WindowExec's spillable buffer and
-    # are filtered — never built as one giant aggregation row), then the
-    # posting agg on the same partitioning (round-1 judge finding; see
-    # ngram_jaccard_pairs for why not a count-aggregate pre-pass)
-    guard = F.col("_n") > 1
-    if max_bucket_size is not None:
-        guard = guard & (F.col("_n") <= max_bucket_size)
-    posting = (
-        P.spread(banded, "band", "bucket")
-        .withColumn("_n", F.count("*").over(Window.partitionBy("band", "bucket")))
-        .filter(guard)
-        .groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
+    posting = _posting_lists(
+        P.spread(banded, "band", "bucket"), ["band", "bucket"], "id", "ids",
+        max_bucket_size,
     )
-    ids = F.col("ids")
-    return (
-        posting.select(F.explode(ids).alias("id_a"), "ids")
-        .select("id_a", F.explode(ids).alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
+    return _pairs(posting, "ids", "id_a", "id_b").distinct()
 
 
-def simhash_fingerprints(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n_bits: int = 16
-) -> DataFrame:
+def simhash_fingerprints(docs: DataFrame, n_bits: int = 16) -> DataFrame:
     """(id, simhash) per document: for each bit, sum +1/-1 over the token
     multiset weighted by the token-md5 bit; the sign forms the fingerprint
     bit.  Near-dup detection joins on small Hamming distance
@@ -978,10 +937,15 @@ def simhash_fingerprints(
     work is O(tokens), not O(tokens * n_bits) as a per-bit expression
     formulation would be.  Tokenless documents (empty text) have every
     contribution sum 0 -> all bits set, preserved via the left join.
+
+    ``n_bits`` must be in [1, 63]: bit 63 would be the BIGINT sign bit,
+    whose ``1 << 63`` term no BIGINT literal holds.
     """
-    ex = _spread(docs.select(id_col, text_col), id_col).select(
-        F.col(id_col).alias("id"),
-        F.explode(T.tokens(F.lower(F.col(text_col)))).alias("tok"),
+    if not 0 < n_bits < 64:
+        raise ValueError(f"n_bits={n_bits} must be in [1, 63] (a BIGINT simhash)")
+    ex = P.spread(docs.select("doc_id", "text"), "doc_id").select(
+        F.col("doc_id").alias("id"),
+        F.explode(T.tokens(F.lower(F.col("text")))).alias("tok"),
     )
     m = F.md5(F.col("tok"))
     n_nibs = (n_bits + 3) // 4
@@ -1007,7 +971,7 @@ def simhash_fingerprints(
             F.coalesce(F.col(f"_s{b}"), F.lit(0)) >= 0, F.lit(1 << b).cast("bigint")
         ).otherwise(F.lit(0).cast("bigint"))
     return (
-        docs.select(F.col(id_col).alias("id"))
+        docs.select(F.col("doc_id").alias("id"))
         .join(sums, "id", "left")
         .select("id", fp.alias("simhash"))
     )
@@ -1015,8 +979,6 @@ def simhash_fingerprints(
 
 def simhash_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_bits: int = 16,
     band_bits: int = 4,
     max_hamming: int = 3,
@@ -1033,7 +995,7 @@ def simhash_pairs(
     self-join would run the whole fingerprint pipeline once per side — and
     the exact ``bit_count(xor)`` filter runs on candidates only.
     """
-    fps = simhash_fingerprints(docs, id_col, text_col, n_bits)
+    fps = simhash_fingerprints(docs, n_bits)
     return hamming_pairs(
         fps,
         n_bits=n_bits,
@@ -1043,21 +1005,27 @@ def simhash_pairs(
     )
 
 
-def hamming_pairs(
+def _bit_bands(
     fps: DataFrame,
-    n_bits: int = 16,
-    band_bits: int = 4,
-    max_hamming: int = 3,
-    max_bucket_size: int | None = 100_000,
-    hash_col: str = "simhash",
+    n_bits: int,
+    band_bits: int,
+    max_hamming: int,
+    id_name: str,
+    hash_name: str,
 ) -> DataFrame:
-    """Banded near-dup pairs over ANY precomputed bit-fingerprint column
-    (id, ``hash_col``) — the blocking+verify engine shared by text SimHash
-    and media perceptual hashes (operators/multimodal.py::phash_pairs).
-    Complete for ``max_hamming < n_bands`` by the pigeonhole bound, so the
-    result EQUALS the all-pairs bit_count(xor) filter — which is what the
-    oracles compare against; fuzz-pinned across (band_bits, max_hamming)
-    draws in tests/test_oracle_fuzz.py."""
+    """(``id_name``, ``hash_name``, band, val): each (id, simhash)
+    fingerprint of ``fps`` split into ``n_bits / band_bits`` bands of
+    ``band_bits`` bits.  Two fingerprints within Hamming ``max_hamming``
+    agree on at least one band when ``max_hamming < n_bands`` (pigeonhole),
+    so blocking on (band, val) misses no pair.  Checked before any Spark
+    call: ``n_bits`` in [1, 64] (a BIGINT fingerprint; the top band of a
+    64-bit one comes out right because the mask drops the sign extension),
+    ``band_bits`` in [1, 63] (its mask must fit a BIGINT), divisibility
+    and the pigeonhole bound."""
+    if not 0 < n_bits <= 64:
+        raise ValueError(f"n_bits={n_bits} must be in [1, 64] (a BIGINT fingerprint)")
+    if not 0 < band_bits < 64:
+        raise ValueError(f"band_bits={band_bits} must be in [1, 63]")
     if n_bits % band_bits != 0:
         raise ValueError(f"n_bits={n_bits} must be divisible by band_bits={band_bits}")
     n_bands = n_bits // band_bits
@@ -1067,8 +1035,6 @@ def hamming_pairs(
             f"guarantee (every pair within max_hamming agrees on some band) "
             f"requires max_hamming < n_bands — use more/narrower bands"
         )
-    if hash_col != "simhash":
-        fps = fps.withColumnRenamed(hash_col, "simhash")
     mask = (1 << band_bits) - 1
     bands = F.explode(
         F.array(
@@ -1083,30 +1049,36 @@ def hamming_pairs(
             ]
         )
     ).alias("b")
-    banded = fps.select("id", "simhash", bands).select(
-        "id", "simhash", F.col("b.band").alias("band"), F.col("b.val").alias("val")
+    return fps.select(
+        F.col("id").alias(id_name), F.col("simhash").alias(hash_name), bands
+    ).select(
+        id_name, hash_name, F.col("b.band").alias("band"), F.col("b.val").alias("val")
     )
-    # skew guard: a degenerate band value shared by a huge slice of the
-    # corpus is noise, not signal; cap its O(L²) single-task fan-out.  The
-    # guard runs BEFORE collect_list as a window count over one exchange, so
-    # the degenerate value's member list is never built as a single
-    # aggregation row and the fingerprint pipeline is not recomputed
-    # (round-1 finding; see ngram_jaccard_pairs for the design note).
-    guard = F.col("_n") > 1
-    if max_bucket_size is not None:
-        guard = guard & (F.col("_n") <= max_bucket_size)
-    posting = (
-        P.spread(banded, "band", "val")
-        .withColumn("_n", F.count("*").over(Window.partitionBy("band", "val")))
-        .filter(guard)
-        .groupBy("band", "val")
-        .agg(F.sort_array(F.collect_list(F.struct("id", "simhash"))).alias("ms"))
+
+
+def hamming_pairs(
+    fps: DataFrame,
+    n_bits: int = 16,
+    band_bits: int = 4,
+    max_hamming: int = 3,
+    max_bucket_size: int | None = 100_000,
+) -> DataFrame:
+    """Banded near-dup pairs over ANY precomputed (id, simhash)
+    bit-fingerprint frame — the blocking+verify engine shared by text
+    SimHash and media perceptual hashes (operators/multimodal.py::phash_pairs).
+    Complete for ``max_hamming < n_bands`` by the pigeonhole bound
+    (:func:`_bit_bands`), so the result EQUALS the all-pairs
+    bit_count(xor) filter — which is what the oracles compare against;
+    fuzz-pinned across (band_bits, max_hamming) draws in
+    tests/test_oracle_fuzz.py.  ``max_bucket_size`` caps a degenerate band
+    value's O(L²) single-task fan-out (:func:`_posting_lists`)."""
+    banded = _bit_bands(fps, n_bits, band_bits, max_hamming, "id", "simhash")
+    posting = _posting_lists(
+        P.spread(banded, "band", "val"), ["band", "val"],
+        F.struct("id", "simhash"), "ms", max_bucket_size,
     )
-    ms = F.col("ms")
     return (
-        posting.select(F.explode(ms).alias("a"), "ms")
-        .select("a", F.explode(ms).alias("b"))
-        .filter(F.col("a.id") < F.col("b.id"))
+        _pairs(posting, "ms", "a", "b", by="id")
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
@@ -1121,9 +1093,6 @@ def hamming_pairs(
 
 def ngram_containment_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
     threshold: float = 0.8,
     max_shingle_freq: int | None = 1000,
 ) -> DataFrame:
@@ -1140,11 +1109,11 @@ def ngram_containment_pairs(
     frequency guard, generate-then-verify under ``max_shingle_freq``) —
     only the final score changes, so the scale posture is identical.
     Output: (id_a, id_b, shared, size_a, size_b) with id_a < id_b;
-    containment is re-derivable exactly from the integer columns.
+    containment is re-derivable exactly from the integer columns.  Word
+    3-gram shingles.
     """
     pairs = ngram_jaccard_pairs(
-        docs, id_col, text_col, n,
-        threshold=0.0, max_shingle_freq=max_shingle_freq,
+        docs, threshold=0.0, max_shingle_freq=max_shingle_freq
     )
     cont = F.col("shared").cast("double") / F.least("size_a", "size_b")
     return pairs.filter(cont >= threshold)
@@ -1156,7 +1125,6 @@ def hamming_pairs_incremental(
     n_bits: int = 16,
     band_bits: int = 4,
     max_hamming: int = 3,
-    hash_col: str = "simhash",
 ) -> DataFrame:
     """Banded Hamming near-dup of a NEW fingerprint batch against an
     EXISTING corpus — the incremental twin of :func:`hamming_pairs` for
@@ -1179,44 +1147,8 @@ def hamming_pairs_incremental(
     pairs only.  Fuzz-pinned equal to the batch operator's cross subset
     (tests/test_oracle_fuzz.py).
     """
-    n_bands = n_bits // band_bits
-    if n_bits % band_bits != 0:
-        raise ValueError(f"n_bits={n_bits} must be divisible by band_bits={band_bits}")
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= n_bands={n_bands}: pigeonhole "
-            f"completeness requires max_hamming < n_bands"
-        )
-    mask = (1 << band_bits) - 1
-
-    def banded(fps, id_alias, hash_alias):
-        f = fps
-        if hash_col != "simhash":
-            f = f.withColumnRenamed(hash_col, "simhash")
-        b = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("simhash"), i * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("val"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("b")
-        return f.select(
-            F.col("id").alias(id_alias),
-            F.col("simhash").alias(hash_alias),
-            b,
-        ).select(
-            id_alias, hash_alias,
-            F.col("b.band").alias("band"), F.col("b.val").alias("val"),
-        )
-
-    c = banded(corpus_fps, "corpus_id", "_ch")
-    nw = banded(new_fps, "new_id", "_nh")
+    c = _bit_bands(corpus_fps, n_bits, band_bits, max_hamming, "corpus_id", "_ch")
+    nw = _bit_bands(new_fps, n_bits, band_bits, max_hamming, "new_id", "_nh")
     return (
         c.join(F.broadcast(nw), ["band", "val"])
         .select(
@@ -1233,10 +1165,6 @@ def hamming_pairs_incremental(
 
 def syndication_matrix(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str = "source",
-    n: int = 3,
     threshold: float = 0.2,
     max_shingle_freq: int | None = None,
 ) -> DataFrame:
@@ -1247,7 +1175,8 @@ def syndication_matrix(
     (a feed pair with a heavy cell is one content wire republished twice —
     drop one side at ingest instead of paying pair-level dedup forever).
 
-    Returns (source_a, source_b, n_pairs) with source_a < source_b.
+    Returns (source_a, source_b, n_pairs) with source_a < source_b, over
+    word 3-gram shingles and the ``source`` column.
 
     Scale shape: rides the inverted-index pair generator (never
     all-pairs); the source lookup is two joins against the (id, source)
@@ -1258,12 +1187,9 @@ def syndication_matrix(
     |sources|².
     """
     pairs = ngram_jaccard_pairs(
-        docs, id_col, text_col, n=n, threshold=threshold,
-        max_shingle_freq=max_shingle_freq,
+        docs, threshold=threshold, max_shingle_freq=max_shingle_freq
     )
-    src = docs.select(
-        F.col(id_col).alias("_id"), F.col(group_col).alias("_src")
-    )
+    src = docs.select(F.col("doc_id").alias("_id"), F.col("source").alias("_src"))
     labeled = (
         pairs.join(
             src.select(F.col("_id").alias("id_a"), F.col("_src").alias("sa")),
@@ -1287,8 +1213,6 @@ def syndication_matrix(
 def cross_corpus_pairs(
     corpus_a: DataFrame,
     corpus_b: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 16,
     bands: int = 4,
     n: int = 3,
@@ -1317,22 +1241,21 @@ def cross_corpus_pairs(
     fuzz-pinned equal to the union corpus LSH's cross subset
     (tests/test_oracle_fuzz.py).
     """
-    ba = minhash_band_buckets(corpus_a, id_col, text_col, k, bands, n).select(
-        F.col("id").alias("id_a"), "band", "bucket"
-    )
-    bb = minhash_band_buckets(corpus_b, id_col, text_col, k, bands, n).select(
-        F.col("id").alias("id_b"), "band", "bucket"
-    )
-    if max_bucket_size is not None:
-        wa = Window.partitionBy("band", "bucket")
-        ba = (
-            ba.withColumn("_n", F.count("*").over(wa))
+    def side(corpus: DataFrame, id_name: str) -> DataFrame:
+        b = minhash_band_buckets(corpus, k=k, bands=bands, n=n).select(
+            F.col("id").alias(id_name), "band", "bucket"
+        )
+        if max_bucket_size is None:
+            return b
+        return (
+            b.withColumn("_n", F.count("*").over(Window.partitionBy("band", "bucket")))
             .filter(F.col("_n") <= max_bucket_size)
             .drop("_n")
         )
-        bb = (
-            bb.withColumn("_n", F.count("*").over(wa))
-            .filter(F.col("_n") <= max_bucket_size)
-            .drop("_n")
-        )
-    return ba.join(bb, ["band", "bucket"]).select("id_a", "id_b").distinct()
+
+    return (
+        side(corpus_a, "id_a")
+        .join(side(corpus_b, "id_b"), ["band", "bucket"])
+        .select("id_a", "id_b")
+        .distinct()
+    )

@@ -22,8 +22,11 @@ projection), :func:`_canonical` (the deduped undirected edge set),
 :func:`_endpoints`/:func:`_node_set` (endpoint stacks and the "``nodes`` or
 the edge endpoints" node set), :func:`_degrees` and :func:`_triangles` (the
 degree-oriented wedge join).  Iterative operators truncate lineage with one
-lazy ``localCheckpoint`` per round; only connected components runs a
-convergence check, the others run a fixed round count.
+``localCheckpoint(eager=False)`` per round; only connected components runs
+a convergence check, the others run a fixed round count.  Under AQE (the
+engine default) such a checkpoint is not lazy: the call runs the
+checkpointed plan's shuffle stages at once, so these builders launch jobs
+while building (tests/test_registry_build_jobs.py).
 """
 
 from __future__ import annotations
@@ -305,8 +308,9 @@ def connected_components(
     # one and confirming in round two.  Canonicalization and dedup come free
     # from small-star's greatest/least + terminal distinct, so this costs
     # one aggregate+join more than the distinct it replaces and saves a full
-    # large+small round.  Checkpoints are LAZY: the count() that follows is
-    # the action that materializes them — one job per round, not two.
+    # large+small round.  Each round's checkpoint call runs the round's
+    # shuffle stages (AQE, the engine default); the count() that follows
+    # runs the final stage and materializes the checkpoint.
     e = _small_star(raw).localCheckpoint(eager=False)
     n_edges = e.count()
     for _ in range(_CC_MAX_ROUNDS):

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from trafficbigdatasearch_spark import partitioning as P
+from trafficbigdatasearch_spark.catalog import file_schema
 from trafficbigdatasearch_spark.functions import text as T
 
 
@@ -274,7 +275,7 @@ def phrase_search_indexed(
         raise ValueError("phrase must have at least 2 tokens")
     buckets = sorted({_bucket_of(t, n_buckets) for t in phrase})
     postings = (
-        spark.read.parquet(path)
+        spark.read.schema(file_schema(spark, path)).parquet(path)
         .filter(F.col("bucket").isin(buckets))
         .filter(F.col("term").isin(phrase))
     )
@@ -429,11 +430,12 @@ def bm25_indexed(
         raise ValueError("terms must be non-empty")
     buckets = sorted({_bucket_of(t, n_buckets) for t in terms})
     postings = (
-        spark.read.parquet(path)
+        spark.read.schema(file_schema(spark, path)).parquet(path)
         .filter(F.col("bucket").isin(buckets))
         .filter(F.col("term").isin(terms))
     )
-    stats = spark.read.parquet(path + "_stats")
+    stats_path = path + "_stats"
+    stats = spark.read.schema(file_schema(spark, stats_path)).parquet(stats_path)
     lens = stats.agg(
         F.sum("dl").alias("_tot"), F.count(F.lit(1)).alias("n")
     ).select("n", (F.col("_tot").cast("double") / F.col("n")).alias("avgdl"))

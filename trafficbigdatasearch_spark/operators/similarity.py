@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from trafficbigdatasearch_spark import partitioning as P
+from trafficbigdatasearch_spark.catalog import file_schema
 from trafficbigdatasearch_spark.functions import vectors as V
 
 
@@ -521,9 +522,10 @@ def ivf_topk_indexed(
     inference with a narrower integer type; the centroid table is cast to
     match so the probe join keys align exactly — a cast on the partitioned
     side would defeat the pruning."""
-    indexed = spark.read.parquet(f"{path}/inverted")
+    inv, cents = f"{path}/inverted", f"{path}/centroids"
+    indexed = spark.read.schema(file_schema(spark, inv)).parquet(inv)
     cell_t = indexed.schema["cell_id"].dataType
-    cq = spark.read.parquet(f"{path}/centroids").withColumn(
+    cq = spark.read.schema(file_schema(spark, cents)).parquet(cents).withColumn(
         "cell_id", F.col("cell_id").cast(cell_t)
     )
     return _ivf_probe_rerank(indexed, cq, queries, k, nprobe, vec_col, query_id_col)

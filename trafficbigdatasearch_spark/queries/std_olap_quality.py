@@ -891,7 +891,7 @@ def stream_merge_upsert_q(spark, sf):
         # whose changes dir never landed
         with open(pointer, "w") as f:
             f.write("vseed")
-    schema = spark.read.parquet(changes_dir).schema
+    schema = file_schema(spark, changes_dir)
     stream = spark.readStream.schema(schema).parquet(changes_dir)
     q = (
         stream.writeStream.foreachBatch(
@@ -965,7 +965,7 @@ def s_minmax_skipping_q(spark, sf):
     pruned = P.read_pruned_by_sidecar(
         spark,
         layout,
-        spark.read.parquet(sidecar_path),
+        spark.read.schema(file_schema(spark, sidecar_path)).parquet(sidecar_path),
         "o_orderdate",
         "1995-01-01",
         "1995-04-01",

@@ -1646,9 +1646,11 @@ def sim_pq_trained_topk_q(spark, sf):
         emb, n_iter=2, centroid_stride=97, kernel="gemm"
     )
     # the trained codebook feeds BOTH the encode pass and the ADC LUT; a
-    # LAZY localCheckpoint (zero jobs at build — the builder contract)
-    # materializes the ~n_cells-row training chain once on first action
-    # instead of replaying two k-means iterations per consumer
+    # localCheckpoint materializes the ~n_cells-row training chain once
+    # instead of replaying two k-means iterations per consumer.  Not lazy
+    # under AQE (the engine default): even eager=False runs the chain's
+    # shuffle stages at this call, inside the builder (the trainer's
+    # per-round collects already make this row run jobs at build)
     cents = trained.select(
         F.col("cell_id").alias("vec_id"), F.col("centroid").alias("embedding")
     ).localCheckpoint(eager=False)

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trafficbigdatasearch_spark.catalog import file_schema
+
 
 def write_month_partitioned(
     df: DataFrame,
@@ -539,7 +541,7 @@ def _read_surviving(spark, path, sidecar, surviving, residual, schema):
     sidecar-sized jobs (KB–MB)."""
     n_total = sidecar.count()
     n_surv = surviving.count()
-    full_schema = schema if schema is not None else spark.read.parquet(path).schema
+    full_schema = schema if schema is not None else file_schema(spark, path)
     if n_surv == 0:
         return spark.read.schema(full_schema).parquet(path).filter(F.lit(False))
     if n_total > 0 and n_surv >= _PRUNE_FALLBACK_RATIO * n_total:

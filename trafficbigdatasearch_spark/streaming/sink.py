@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trafficbigdatasearch_spark.catalog import file_schema
 from trafficbigdatasearch_spark.sources.parquet import upsert_partitions
 
 
@@ -122,7 +123,8 @@ def read_merge_snapshot(spark, snapshot_dir: str, version: str | None = None) ->
     if version is None:
         with open(os.path.join(snapshot_dir, "_CURRENT")) as f:
             version = f.read().strip()
-    return spark.read.parquet(os.path.join(snapshot_dir, version))
+    path = os.path.join(snapshot_dir, version)
+    return spark.read.schema(file_schema(spark, path)).parquet(path)
 
 
 def list_merge_versions(snapshot_dir: str) -> list[str]:
